@@ -169,13 +169,13 @@ object TableFormat {
     val countsJson = counts.map { case (b, n) => s""""$b": $n""" }.mkString("{", ", ", "}")
     val metrics = s"""{"rows": ${counts.map(_._2).sum}, "files": $nFiles, """ +
       s""""bytes": $nBytes, "write_ms": $writeMs}"""
-    // JSON-escape quotes/backslashes in the flat fields: untrusted strings
-    // (the HTTP surface's update_id stamp) ride here, and an unescaped quote
-    // would corrupt the store's completeness marker. readManifest's field
-    // regex already unescapes \" and \\ symmetrically.
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    // Jackson-quote the flat fields: untrusted strings (the HTTP surface's
+    // update_id stamp) ride here, and an unescaped quote or control char
+    // would corrupt the store's completeness marker. readManifest decodes
+    // each field with the same mapper, the exact inverse.
     val kv = (fields + ("wall_ms" -> System.currentTimeMillis().toString))
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }.mkString(", ")
+      .map { case (k, v) => s"""${mapper.writeValueAsString(k)}: ${mapper.writeValueAsString(v)}""" }
+      .mkString(", ")
     val json = s"""{$kv, "partition_rows": $countsJson, "metrics": $metrics, "complete": true}"""
     // Atomic publish: the manifest is the stage's "complete" marker, so a
     // crash mid-write must not leave a readable half manifest (resume would
@@ -204,6 +204,8 @@ object TableFormat {
     def buckets: Int = fields.getOrElse("buckets", "32").toInt
   }
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private val manifestFieldRe =
     """"([A-Za-z_][A-Za-z0-9_]*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
   private val manifestLeafRe = """"([^"]+)"\s*:\s*(\d+)""".r
@@ -216,7 +218,7 @@ object TableFormat {
   def readManifest(path: String): Manifest = {
     val text = Files.readString(Paths.get(path, "_manifest.json"))
     val fields = manifestFieldRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).replaceAll("""\\(.)""", "$1")).toMap
+      .map(m => m.group(1) -> mapper.readValue("\"" + m.group(2) + "\"", classOf[String])).toMap
     def block(name: String): String = {
       val at = text.indexOf(s""""$name"""")
       if (at < 0) "{}"

@@ -1,11 +1,11 @@
 package graft.serve
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.HttpServer
 import graft.Pipeline
 import graft.fixtures.Fixtures
 import graft.ner.NerModel
-import java.net.InetSocketAddress
+import graft.serve.JsonListener.detail
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal HTTP listener over [[Serve.handle]] — makes the parity with the
@@ -25,16 +25,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 object HttpServe {
 
   private val mapper = new ObjectMapper()
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }
-
-  private def detail(msg: String): String = s"""{"detail":"${jsonEscape(msg)}"}"""
 
   /** 400-shaped client error (malformed request syntax). */
   private[serve] final class BadRequest(msg: String) extends RuntimeException(msg)
@@ -100,61 +90,30 @@ object HttpServe {
   }
 
   /** Start the listener (port 0 = ephemeral, read it back from the result).
-    * Serving is µs-scale CPU work per request ([[Serve]] scaladoc), so a
-    * small fixed pool is plenty; the heavy state (model registry) is loaded
-    * once here, exactly like the reference's startup `load_all_models`. */
+    * Serving is µs-scale CPU work per request ([[Serve]] scaladoc), so the
+    * [[JsonListener]] core's small fixed pool is plenty; the heavy state
+    * (model registry) is loaded once here, exactly like the reference's
+    * startup `load_all_models`. */
   def start(port: Int,
             registry: Map[String, NerModel] = Pipeline.fixtureRegistry,
-            lexicon: Set[String] = Fixtures.lexicon): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (status, out) =
-          try {
-            val path = ex.getRequestURI.getPath.stripPrefix("/").stripSuffix("/")
-            (ex.getRequestMethod, path) match {
-              case ("GET", "") => (200, Serve.listCommandsJson)
-              case ("POST", cmd) if Serve.availableCommands.contains(cmd) =>
-                val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-                val req = parseRequest(body, parseQuery(ex.getRequestURI.getRawQuery))
-                (200, Serve.handle(cmd, req, registry, lexicon))
-              case ("POST", cmd) => (404, detail(s"unknown command '$cmd'"))
-              case _             => (405, detail("method not allowed"))
-            }
-          } catch {
-            case e: NoSuchElementException                       => (404, detail(e.getMessage))
-            case e: UnprocessableEntity                          => (422, detail(e.getMessage))
-            case e: BadRequest                                   => (400, detail(e.getMessage))
-            case e: com.fasterxml.jackson.core.JacksonException  =>
-              (400, detail(s"malformed JSON body: ${e.getOriginalMessage}"))
-            case e: Exception                                    => (500, detail(String.valueOf(e.getMessage)))
-          }
-        val bytes = out.getBytes(UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, if (bytes.length == 0) -1 else bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    // daemon pool: worker threads can never pin the JVM open; [[stop]] shuts
-    // the pool down (HttpServer.stop leaves a user-supplied executor running)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-serve"); t.setDaemon(true); t
-    }))
-    server.start()
-    server
-  }
+            lexicon: Set[String] = Fixtures.lexicon): HttpServer =
+    JsonListener.start(port, "graft-serve")(
+      ex => (ex.getRequestMethod, JsonListener.path(ex)) match {
+        case ("GET", "") => (200, Serve.listCommandsJson)
+        case ("POST", cmd) if Serve.availableCommands.contains(cmd) =>
+          val req = parseRequest(JsonListener.body(ex), parseQuery(ex.getRequestURI.getRawQuery))
+          (200, Serve.handle(cmd, req, registry, lexicon))
+        case ("POST", cmd) => (404, detail(s"unknown command '$cmd'"))
+        case _             => (405, detail("method not allowed"))
+      },
+      {
+        case e: NoSuchElementException => (404, detail(e.getMessage))
+        case e: UnprocessableEntity    => (422, detail(e.getMessage))
+        case e: BadRequest             => (400, detail(e.getMessage))
+      })
 
-  /** Stop a listener started by [[start]]: stops the socket AND shuts down
-    * its executor pool — `HttpServer.stop` alone does not stop a
-    * user-supplied executor, so repeated start/stop cycles would leak it. */
-  def stop(server: HttpServer): Unit = {
-    server.stop(0)
-    server.getExecutor match {
-      case es: java.util.concurrent.ExecutorService => es.shutdown()
-      case _ =>
-    }
-  }
+  /** Stop a listener started by [[start]] (socket + its executor pool). */
+  def stop(server: HttpServer): Unit = JsonListener.stop(server)
 
   def main(args: Array[String]): Unit = {
     val port = args.headOption.orElse(sys.env.get("GRAFT_SERVE_PORT"))

@@ -1,12 +1,14 @@
 package graft.serve
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.kg.Sparql
-import org.apache.spark.sql.DataFrame
+import com.sun.net.httpserver.HttpServer
+import graft.io.TableFormat
+import graft.kg.{Pattern, Sparql}
+import graft.serve.JsonListener.detail
+import graft.serve.Serve.str
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.AtomicReference
 
 /** KG query endpoint — the engine-side EXTENSION listener (deliberately a
   * SEPARATE server from [[HttpServe]], whose path space and error mapping
@@ -34,36 +36,37 @@ object KgHttp {
 
   private val mapper = new ObjectMapper()
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case '\n'          => sb.append("\\n")
-      case '\r'          => sb.append("\\r")
-      case '\t'          => sb.append("\\t")
-      case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
-    }
-    sb.append('"').toString
-  }
+  /** Triples frame + per-predicate stats; each reload publishes a new one. */
+  private[graft] type Frame = (DataFrame, Option[Map[String, Long]])
 
-  private def detail(msg: String): String = s"""{"detail":${jsonStr(String.valueOf(msg))}}"""
+  private[graft] def loadFrame(spark: SparkSession, storePath: String): Frame =
+    (TableFormat.load(spark, storePath), Some(Pattern.predStatsFromManifest(storePath)))
 
   /** A read that failed because the parquet facade's files moved under it —
     * an update overwrote/deleted leaf files the served frame's FileIndex
     * still lists. Spark surfaces this as a FileNotFoundException somewhere
     * in the cause chain, or the "REFRESH TABLE" advice message. */
-  private[graft] def isStaleRead(e: Throwable): Boolean = {
-    var c: Throwable = e
-    while (c != null) {
-      if (c.isInstanceOf[java.io.FileNotFoundException]) return true
+  private[graft] def isStaleRead(e: Throwable): Boolean =
+    // bounded walk: a cyclic cause chain (initCause can build one) must not spin
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(64).exists { c =>
       val m = String.valueOf(c.getMessage)
-      if (m.contains("REFRESH TABLE") || m.contains("FILE_NOT_EXIST")) return true
-      c = if (c.getCause eq c) null else c.getCause
+      c.isInstanceOf[java.io.FileNotFoundException] ||
+        m.contains("REFRESH TABLE") || m.contains("FILE_NOT_EXIST")
     }
-    false
-  }
+
+  /** The frame to retry a stale read of `read` on. Under `updateLock` it
+    * never sees a mid-commit store, and the compare-and-set against `read`
+    * never overwrites a newer frame a commit already published. */
+  private[graft] def reloadStale(state: AtomicReference[Frame], read: Frame,
+                                 storePath: String, updateLock: AnyRef): Frame =
+    updateLock.synchronized {
+      if (state.get() eq read) {
+        val spark = read._1.sparkSession
+        spark.catalog.refreshByPath(storePath)
+        state.compareAndSet(read, loadFrame(spark, storePath))
+      }
+      state.get()
+    }
 
   private[graft] def runQuery(triples: DataFrame, q: String, maxRows: Int,
                               stats: Option[Map[String, Long]] = None): String = {
@@ -77,11 +80,11 @@ object KgHttp {
         val v = r.get(i)
         if (v == null) "null" else v match {
           case n: java.lang.Long => n.toString
-          case other             => jsonStr(other.toString)
+          case other             => str(other.toString)
         }
       }.mkString("[", ",", "]")
     }.mkString("[", ",", "]")
-    s"""{"columns":${cols.map(jsonStr).mkString("[", ",", "]")},""" +
+    s"""{"columns":${cols.map(str).mkString("[", ",", "]")},""" +
       s""""rows":$rowsJson,"n":${shown.length},"truncated":$truncated}"""
   }
 
@@ -103,93 +106,62 @@ object KgHttp {
   def start(port: Int, triples: DataFrame, maxRows: Int = 1000,
             stats: Option[Map[String, Long]] = None,
             storePath: Option[String] = None): HttpServer = {
-    val state = new java.util.concurrent.atomic.AtomicReference((triples, stats))
+    val state = new AtomicReference[Frame]((triples, stats))
     val updateLock = new Object
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (status, out) =
-          try {
-            val path = ex.getRequestURI.getPath.stripPrefix("/").stripSuffix("/")
-            (ex.getRequestMethod, path) match {
-              case ("GET", "") =>
-                (200, """{"endpoint":"/kg","body":{"query":"SELECT [DISTINCT] (?v ...|aggs|*) WHERE { ... FILTER/VALUES ... } [GROUP BY][ORDER BY][LIMIT][OFFSET] | ASK { ... } | CONSTRUCT { ... } WHERE { ... } | DESCRIBE (const|?v ... WHERE { ... })"},"update_endpoint":"/kg/update","update_body":{"update":"INSERT DATA { ... } ; DELETE WHERE { ... } ...","dry_run":"bool?","update_id":"string?"}}""")
-              case ("POST", "kg") =>
-                val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-                val root = mapper.readTree(body)
-                if (root == null || !root.has("query") || !root.get("query").isTextual)
-                  (400, detail("body must be a JSON object with a string 'query' field"))
-                else {
-                  val (t, st) = state.get()
-                  val q = root.get("query").asText
-                  try (200, runQuery(t, q, maxRows, st))
-                  catch {
-                    // stale-file read: a store update raced this query and
-                    // replaced leaf files the served frame still lists. A
-                    // store-backed listener self-heals — reload the frame +
-                    // stats from the committed store and retry once —
-                    // instead of handing an innocent reader a 500 (the
-                    // Iceberg-snapshot upgrade removes the race entirely).
-                    case e: Exception if isStaleRead(e) && storePath.isDefined =>
-                      val sp = storePath.get
-                      val spark = t.sparkSession
-                      spark.catalog.refreshByPath(sp)
-                      val fresh = (graft.io.TableFormat.load(spark, sp),
-                        Some(graft.kg.Pattern.predStatsFromManifest(sp)))
-                      state.set(fresh)
-                      (200, runQuery(fresh._1, q, maxRows, fresh._2))
-                  }
-                }
-              case ("POST", "kg/update") =>
-                val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-                val root = mapper.readTree(body)
-                if (root == null || !root.has("update") || !root.get("update").isTextual)
-                  (400, detail("body must be a JSON object with a string 'update' field"))
-                else {
-                  val text = root.get("update").asText
-                  val dryRun = root.has("dry_run") && root.get("dry_run").asBoolean(false)
-                  if (dryRun)
-                    (200, s"""{"ops":${Sparql.parseUpdateCount(text)},"dry_run":true}""")
-                  else storePath match {
-                    case None =>
-                      (400, detail("this listener serves a loaded frame — updates need a store-backed listener (startFromStore)"))
-                    case Some(sp) => updateLock.synchronized {
-                      val id = if (root.has("update_id") && root.get("update_id").isTextual)
-                        Some(root.get("update_id").asText) else None
-                      val spark = state.get()._1.sparkSession
-                      val reports = Sparql.update(spark, sp, text, updateId = id)
-                      state.set((graft.io.TableFormat.load(spark, sp),
-                        Some(graft.kg.Pattern.predStatsFromManifest(sp))))
-                      val applied = reports.count(!_.skipped)
-                      (200, s"""{"ops":${reports.size},"applied":$applied,""" +
-                        s""""skipped":${reports.size - applied},""" +
-                        s""""touched_leaves":${reports.map(_.touchedLeaves).sum},""" +
-                        s""""rows_before":${reports.map(_.rowsBefore).sum},""" +
-                        s""""rows_after":${reports.map(_.rowsAfter).sum}}""")
-                    }
-                  }
-                }
-              case ("POST", p) => (404, detail(s"unknown path '/$p'"))
-              case _           => (405, detail("method not allowed"))
+    JsonListener.start(port, "graft-kg-serve")(
+      ex => (ex.getRequestMethod, JsonListener.path(ex)) match {
+        case ("GET", "") =>
+          (200, """{"endpoint":"/kg","body":{"query":"SELECT [DISTINCT] (?v ...|aggs|*) WHERE { ... FILTER/VALUES ... } [GROUP BY][ORDER BY][LIMIT][OFFSET] | ASK { ... } | CONSTRUCT { ... } WHERE { ... } | DESCRIBE (const|?v ... WHERE { ... })"},"update_endpoint":"/kg/update","update_body":{"update":"INSERT DATA { ... } ; DELETE WHERE { ... } ...","dry_run":"bool?","update_id":"string?"}}""")
+        case ("POST", "kg") =>
+          val root = mapper.readTree(JsonListener.body(ex))
+          if (root == null || !root.has("query") || !root.get("query").isTextual)
+            (400, detail("body must be a JSON object with a string 'query' field"))
+          else {
+            val read @ (t, st) = state.get()
+            val q = root.get("query").asText
+            try (200, runQuery(t, q, maxRows, st))
+            catch {
+              // stale-file read: a store update raced this query and
+              // replaced leaf files the served frame still lists. A
+              // store-backed listener self-heals — retry once on the
+              // committed state — instead of handing an innocent reader a
+              // 500 (the Iceberg-snapshot upgrade removes the race entirely).
+              case e: Exception if isStaleRead(e) && storePath.isDefined =>
+                val (ft, fst) = reloadStale(state, read, storePath.get, updateLock)
+                (200, runQuery(ft, q, maxRows, fst))
             }
-          } catch {
-            case e: IllegalArgumentException                    => (400, detail(e.getMessage))
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              (400, detail(s"malformed JSON body: ${e.getOriginalMessage}"))
-            case e: Exception                                   => (500, detail(String.valueOf(e.getMessage)))
           }
-        val bytes = out.getBytes(UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, if (bytes.length == 0) -1 else bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-kg-serve"); t.setDaemon(true); t
-    }))
-    server.start()
-    server
+        case ("POST", "kg/update") =>
+          val root = mapper.readTree(JsonListener.body(ex))
+          if (root == null || !root.has("update") || !root.get("update").isTextual)
+            (400, detail("body must be a JSON object with a string 'update' field"))
+          else {
+            val text = root.get("update").asText
+            val dryRun = root.has("dry_run") && root.get("dry_run").asBoolean(false)
+            if (dryRun)
+              (200, s"""{"ops":${Sparql.parseUpdateCount(text)},"dry_run":true}""")
+            else storePath match {
+              case None =>
+                (400, detail("this listener serves a loaded frame — updates need a store-backed listener (startFromStore)"))
+              case Some(sp) => updateLock.synchronized {
+                val id = if (root.has("update_id") && root.get("update_id").isTextual)
+                  Some(root.get("update_id").asText) else None
+                val spark = state.get()._1.sparkSession
+                val reports = Sparql.update(spark, sp, text, updateId = id)
+                state.set(loadFrame(spark, sp))
+                val applied = reports.count(!_.skipped)
+                (200, s"""{"ops":${reports.size},"applied":$applied,""" +
+                  s""""skipped":${reports.size - applied},""" +
+                  s""""touched_leaves":${reports.map(_.touchedLeaves).sum},""" +
+                  s""""rows_before":${reports.map(_.rowsBefore).sum},""" +
+                  s""""rows_after":${reports.map(_.rowsAfter).sum}}""")
+              }
+            }
+          }
+        case ("POST", p) => (404, detail(s"unknown path '/$p'"))
+        case _           => (405, detail("method not allowed"))
+      },
+      { case e: IllegalArgumentException => (400, detail(e.getMessage)) })
   }
 
   /** [[start]] over a TableFormat.savePartitioned store PATH: loads the
@@ -198,18 +170,12 @@ object KgHttp {
     * ([[graft.kg.Pattern.predStatsFromManifest]]), so a server fronting a
     * 10^12-triple store pays one small JSON read, never a counting scan,
     * and every query it serves gets the selectivity-ordered fold. */
-  def startFromStore(port: Int, spark: org.apache.spark.sql.SparkSession,
-                     storePath: String, maxRows: Int = 1000): HttpServer =
-    start(port, graft.io.TableFormat.load(spark, storePath), maxRows,
-      stats = Some(graft.kg.Pattern.predStatsFromManifest(storePath)),
-      storePath = Some(storePath))
+  def startFromStore(port: Int, spark: SparkSession,
+                     storePath: String, maxRows: Int = 1000): HttpServer = {
+    val (triples, stats) = loadFrame(spark, storePath)
+    start(port, triples, maxRows, stats, Some(storePath))
+  }
 
   /** Stop a listener started by [[start]] (socket + its executor pool). */
-  def stop(server: HttpServer): Unit = {
-    server.stop(0)
-    server.getExecutor match {
-      case es: java.util.concurrent.ExecutorService => es.shutdown()
-      case _ =>
-    }
-  }
+  def stop(server: HttpServer): Unit = JsonListener.stop(server)
 }

@@ -294,7 +294,9 @@ object Serve {
 
   // ---------- minimal JSON writer (no deps; strings escaped per RFC 8259) ----------
 
-  private def str(s: String): String = {
+  /** A JSON string literal — the serve layer's one escaper ([[HttpServe]],
+    * [[KgHttp]] and their error bodies use it too). */
+  private[serve] def str(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 2)
     sb.append('"')
     var i = 0

@@ -183,6 +183,46 @@ class KgHttpSpec extends AnyFunSuite {
     } finally KgHttp.stop(server)
   }
 
+  test("stale-read reload keeps a newer frame a commit published after the failed read") {
+    import graft.io.TableFormat
+    import java.util.concurrent.atomic.AtomicReference
+    val store = java.nio.file.Files.createTempDirectory("graft-kghttp-cas").toString + "/triples"
+    TableFormat.savePartitioned(
+      trip.withColumn("doc_id", org.apache.spark.sql.functions.lit("d1")),
+      store, partCol = "pred", keyCol = "subj", buckets = 2, stage = "triples")
+    val lock = new Object
+    val read = KgHttp.loadFrame(spark, store)
+    val state = new AtomicReference[KgHttp.Frame](read)
+    // a commit publishes a newer frame between the failed read and the reload
+    val newer = KgHttp.loadFrame(spark, store)
+    state.set(newer)
+    assert(KgHttp.reloadStale(state, read, store, lock) eq newer)
+    assert(state.get() eq newer)
+    // with no newer frame, the reload swaps in a fresh one from the store
+    val fresh = KgHttp.reloadStale(state, newer, store, lock)
+    assert(fresh ne newer)
+    assert(state.get() eq fresh)
+    assert(fresh._2 === Some(graft.kg.Pattern.predStatsFromManifest(store)))
+  }
+
+  test("isStaleRead terminates on a cyclic cause chain") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val a = new RuntimeException("a")
+    val b = new RuntimeException("b", a)
+    a.initCause(b)
+    val walk = Future(KgHttp.isStaleRead(a))(scala.concurrent.ExecutionContext.global)
+    assert(!Await.result(walk, 10.seconds))
+  }
+
+  test("keep-alive responses do not wait on the client's delayed ACK") {
+    val server = KgHttp.start(0, trip)
+    try {
+      val median = KeepAliveProbe.medianGetMs(server.getAddress.getPort)
+      assert(median < 20.0, s"median keep-alive GET / round trip $median ms")
+    } finally KgHttp.stop(server)
+  }
+
   private def jstr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

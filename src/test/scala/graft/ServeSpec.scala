@@ -250,4 +250,14 @@ class ServeSpec extends AnyFunSuite {
       assert(empty.statusCode() === 200 && empty.body() === "[]")
     } finally graft.serve.HttpServe.stop(server)
   }
+
+  test("http listener: keep-alive responses do not wait on the client's delayed ACK") {
+    // headers and body leave in two writes; without TCP_NODELAY on the
+    // accepted socket, Nagle holds the body ~40 ms for the delayed ACK
+    val server = graft.serve.HttpServe.start(0)
+    try {
+      val median = KeepAliveProbe.medianGetMs(server.getAddress.getPort)
+      assert(median < 20.0, s"median keep-alive GET / round trip $median ms")
+    } finally graft.serve.HttpServe.stop(server)
+  }
 }

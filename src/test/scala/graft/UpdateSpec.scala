@@ -172,6 +172,18 @@ class UpdateSpec extends AnyFunSuite {
     manifestCountsMatchScan(store)
   }
 
+  test("update-id with quotes and control chars round-trips through the manifest; replay skips") {
+    val store = freshStore()
+    val id = "id\"\n\t\u0001x"
+    val script = "INSERT DATA { ent:9 category LOC }"
+    assert(Sparql.update(spark, store, script, updateId = Some(id)).forall(!_.skipped))
+    assert(TableFormat.readManifest(store).fields("update_id") === id)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(Paths.get(store, "_manifest.json")))
+    assert(parsed.get("update_id").asText === id)
+    assert(Sparql.update(spark, store, script, updateId = Some(id)).forall(_.skipped))
+  }
+
   test("parser guards: variables in DATA, unbound template var, non-plain DELETE WHERE, bad head") {
     val store = freshStore()
     assert(intercept[IllegalArgumentException] {
