@@ -1,30 +1,98 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Entity canonicalization (SURVEY §2 C12): connected components over
   * entity-equivalence edges, GraphFrames-free.
   *
-  * Algorithm: min-label propagation with POINTER JUMPING — every node starts
-  * with label = own id; each iteration takes the min over neighbors' labels
-  * and then adopts label(label(v)) (path doubling), so convergence is
-  * O(log diameter) iterations even on chain-shaped components (plain
-  * propagation is O(diameter) — a 30-diameter near-dup chain costs 31 rounds
-  * vs 6 jumped). `localCheckpoint()` per iteration cuts the lineage so plans
-  * stay O(1) instead of growing per loop (classic iterative-Dataset failure
-  * mode at scale); the fixpoint test is a narrow scan (monotone label-sum),
-  * not a join against the previous labels. Edge count ≪ doc count so the
-  * per-iteration shuffle is small.
+  * Two algorithms, one result. [[connectedComponents]] picks by size, with
+  * the test Spark itself uses to decide that a relation may be collected and
+  * broadcast: an edge set whose estimated size is at most
+  * `spark.sql.autoBroadcastJoinThreshold` is collected once and solved by
+  * union-find on the driver (one Spark job, no fixpoint loop, and no
+  * per-round generated code to compile); a larger one — the design scale —
+  * runs the distributed loop. At most a broadcast-sized edge set is ever
+  * collected. Setting the threshold to `-1` forces the loop.
+  *
+  * The distributed loop: min-label propagation with POINTER JUMPING — every
+  * node starts with label = own id; each iteration takes the min over
+  * neighbors' labels and then adopts label(label(v)) (path doubling), so
+  * convergence is O(log diameter) iterations even on chain-shaped components
+  * (plain propagation is O(diameter) — a 30-diameter near-dup chain costs 31
+  * rounds vs 6 jumped). `localCheckpoint()` per iteration cuts the lineage so
+  * plans stay O(1) instead of growing per loop (classic iterative-Dataset
+  * failure mode at scale); the fixpoint test is a narrow scan (monotone
+  * label-sum), not a join against the previous labels. Edge count ≪ doc count
+  * so the per-iteration shuffle is small.
   */
 object Canonicalize {
 
-  /** edges: (src, dst) undirected, any orderable id type (long ids get the
-    * cheapest convergence detector; string ids work — "component" is then the
-    * lexicographically-min member id). Returns (node, component = min node id
-    * of its component). */
+  /** edges: (src, dst) undirected, non-null ids of any orderable type (long
+    * ids get the distributed loop's cheapest convergence detector; string
+    * ids work — "component" is then the min member id in Spark's ordering,
+    * UTF-8 byte order). Returns (node, component = min node id of its
+    * component), one row per edge endpoint.
+    *
+    * Runs on the driver when the edge set's estimated size is within Spark's
+    * broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`, ≥ 0), else
+    * as the distributed loop; `-1` forces the loop. Both return the same rows
+    * and schema. The driver path always converges, so `maxIter` only bounds
+    * the distributed loop. */
   def connectedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    import spark.implicits._
+    val pairs = edges.select(col("src"), col("dst"))
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && pairs.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
+      driverComponents(spark, pairs)
+    else distributedComponents(spark, edges, maxIter)
+  }
+
+  /** Both directions of every edge: the distributed loop's neighbor relation,
+    * and the source of the node column's type and nullability on both paths. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** Union-find over the collected edges. Nodes are numbered in Spark's
+    * ordering of their ids, and a union keeps the smaller root, so each root
+    * is its component's minimum — the label [[distributedComponents]]
+    * converges to. */
+  private def driverComponents(spark: SparkSession, pairs: DataFrame): DataFrame = {
+    val nodeField = symmetric(pairs).schema("src")
+    val dt = nodeField.dataType
+    val edges = pairs.select(col("src").cast(dt), col("dst").cast(dt)).collect()
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ordering = TypeUtils.getInterpretedOrdering(dt)
+    val nodes = edges.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).distinct
+      .map(id => (id, toCatalyst(id))).toArray
+      .sortWith((a, b) => ordering.lt(a._2, b._2)).map(_._1)
+    val index = nodes.iterator.zipWithIndex.toMap
+    val parent = Array.range(0, nodes.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    edges.foreach { e =>
+      val (a, b) = (find(index(e.get(0))), find(index(e.get(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val rows = nodes.indices.map(i => Row(nodes(i), nodes(find(i))))
+    // component comes out of the loop's min aggregate, which is nullable
+    val schema = StructType(Seq(nodeField.copy(name = "node"),
+      StructField("component", dt, nullable = true)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The distributed fixpoint loop (see the object doc); what
+    * [[connectedComponents]] runs on an edge set above the broadcast
+    * threshold. */
+  private def distributedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int): DataFrame = {
     // partitioned ONCE on the per-iteration join key (dst), with the dedup
     // fused into that same exchange (partition-local distinct: same-dst rows
     // are co-located, and HashPartitioning(dst) satisfies the aggregate's
@@ -33,8 +101,7 @@ object Canonicalize {
     // and only the vertex-sized label side shuffles per round. The previous
     // shape (distinct, then checkpoint, no repartition) left sym hashed on
     // (src, dst) and re-exchanged the whole edge set EVERY iteration.
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = symmetric(edges)
       .repartition(col("dst"))
       .distinct()
       .localCheckpoint(false) // lazy: materializes inside iteration 1's job

@@ -415,7 +415,13 @@ object Pattern {
     * on a c-node component pushes ~c³ intermediate rows per round through
     * the shuffle; this path shuffles c rows per round and c² once.
     * Result-equal to [[pathPlus]] on any symmetric input (asserted in
-    * PatternSpec). */
+    * PatternSpec).
+    *
+    * The labels come from [[Canonicalize.connectedComponents]]: union-find
+    * on the driver when the edge set's estimated size is within Spark's
+    * broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`), else the
+    * distributed loop, which `-1` forces; `maxIter` only bounds that loop.
+    * The pair expansion is a Spark join on either path. */
   def symClosurePairs(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val labels = Canonicalize.connectedComponents(edges.sparkSession, edges, maxIter)
     labels.as("a").join(labels.as("b"), col("a.component") === col("b.component"))
@@ -427,7 +433,11 @@ object Pattern {
     * edges in either direction"): [[pathPlus]] over the predicate family
     * unioned with its inverse. Output is pairs; for dense components prefer
     * component LABELS (kg.Canonicalize's pointer-jumping CC — linear output)
-    * and derive pairs only for the components a query actually touches. */
+    * and derive pairs only for the components a query actually touches.
+    * This is the doubling reference; parsed `(p|^p)+` in [[Sparql]] takes
+    * [[symClosurePairs]] instead, which labels a broadcast-sized family on
+    * the driver and runs the distributed CC loop only above Spark's
+    * broadcast threshold (or when it is `-1`). */
   def predSymPathPlus(triples: DataFrame, pred: String, maxRounds: Int = 20): DataFrame = {
     val fam = triples.filter(col("pred") === lit(pred))
     val fwd = fam.select(col("subj").as("src"), col("obj").as("dst"))

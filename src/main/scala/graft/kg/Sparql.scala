@@ -60,7 +60,11 @@ import graft.io.TableFormat
   * `p/q`, `(sameAs|^sameAs)+`, `p*` — compiled to the [[Pattern]] path
   * algebra (predAlt/predInv/pathSeq/pathPlus/pathStar) and joined into the
   * conjunction like any other pattern; groups and UNION branches stay
-  * plain-predicate (the Pattern API they compile to).
+  * plain-predicate (the Pattern API they compile to). `(p|^p)+` is answered
+  * from connected-component labels: union-find on the driver while the
+  * family's estimated size is within Spark's broadcast threshold
+  * (`spark.sql.autoBroadcastJoinThreshold`), the distributed CC loop above
+  * it or when it is `-1`. Directed `p+`/`p*` always run the doubling loop.
   *
   * Aggregates follow SPARQL §11: they evaluate over the solution MULTISET
   * (provenance duplicates count unless the aggregate says DISTINCT), plain
@@ -216,7 +220,11 @@ object Sparql {
     * iterative doubling, which pushes ~c³ intermediate rows per round on a
     * c-node dense component. Result-equal to pathPlus on any symmetric
     * input (asserted in PatternSpec); same oracle (`nemo_kg_sparql_path` vs
-    * the CC-based programmatic twin). */
+    * the CC-based programmatic twin). The labels are union-find on the
+    * driver while the family's estimated size is within Spark's broadcast
+    * threshold (`spark.sql.autoBroadcastJoinThreshold`) — a fixed number of
+    * jobs whatever the diameter — and the distributed CC loop above it, or
+    * when the threshold is `-1`. */
   private def symClosureShape(p: Path): Boolean = p match {
     case PAltE(Seq(PPred(a), PInv(PPred(b)))) => a == b
     case PAltE(Seq(PInv(PPred(a)), PPred(b))) => a == b

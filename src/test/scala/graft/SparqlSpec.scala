@@ -216,6 +216,35 @@ class SparqlSpec extends AnyFunSuite {
       .getMessage.contains("required pattern only"))
   }
 
+  test("(p|^p)+ takes as many Spark jobs over a 64-edge chain as over one edge") {
+    // connected components over a broadcast-sized family run on the driver:
+    // a distributed fixpoint loop would add rounds as the diameter grows
+    val q = "SELECT DISTINCT ?src ?dst WHERE { ?src (sameAs|^sameAs)+ ?dst }"
+    def jobs(edges: Int): Long = {
+      // read back from parquet, like the store: the optimizer folds an
+      // in-memory one-row relation's DISTINCTs away, which would cost the
+      // one-edge run a job for a reason unrelated to the closure
+      val dir = java.nio.file.Files.createTempDirectory("sameas").resolve("t").toString
+      (0 until edges).map(i => (s"e$i", "sameAs", s"e${i + 1}"))
+        .toDF("subj", "pred", "obj").write.parquet(dir)
+      val chain = spark.read.parquet(dir)
+      val n = new java.util.concurrent.atomic.AtomicLong
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(counter)
+      try {
+        // one component of edges + 1 nodes: every ordered pair, (x, x) included
+        assert(Sparql.query(chain, q).collect().length === (edges + 1) * (edges + 1))
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        n.get
+      } finally spark.sparkContext.removeSparkListener(counter)
+    }
+    assert(jobs(64) === jobs(1))
+  }
+
   test("aggregate validation errors are loud") {
     def err(q: String): String =
       intercept[IllegalArgumentException](Sparql.query(trip, q)).getMessage
