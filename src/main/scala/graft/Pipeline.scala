@@ -439,15 +439,12 @@ object Pipeline {
     // current w.r.t. the inputs it was built from. The docs_labeled manifest
     // additionally records the model fingerprint: resuming with DIFFERENT
     // injected weights must re-annotate, not serve the old model's outputs.
-    def manifestField(path: String, field: String): Option[String] = {
-      val mf = java.nio.file.Paths.get(path, "_manifest.json")
-      if (!java.nio.file.Files.exists(mf)) None
-      else s""""$field": "([^"]*)"""".r
-        .findFirstMatchIn(java.nio.file.Files.readString(mf)).map(_.group(1))
-    }
+    // A stage is reused only when its manifest records `field = value`, the
+    // input it must have been built from.
     var dirty = false
-    def stage(path: String, current: => Boolean = true)(build: => Unit): Unit =
-      if (dirty || !(resume && TableFormat.isComplete(path) && current)) {
+    def stage(path: String, field: String, value: String)(build: => Unit): Unit =
+      if (dirty || !(resume && TableFormat.isComplete(path) &&
+          TableFormat.readManifest(path).fields.get(field).contains(value))) {
         build; dirty = true
       }
     // dictionary content fingerprint — linked/entities/triples are functions
@@ -456,7 +453,7 @@ object Pipeline {
     val dictFp = dictFingerprint(dict)
 
     // (a) docs_labeled — model-dependent: fingerprint gates the resume
-    stage(paths.docsLabeled, manifestField(paths.docsLabeled, "models_fp").contains(fp)) {
+    stage(paths.docsLabeled, "models_fp", fp) {
       val annotated = annotate(spark, docs, modelsBc)
       TableFormat.save(annotated.toDF(), paths.docsLabeled, "doc_id", buckets,
         "docs_labeled", extra = Map("models_fp" -> fp))
@@ -465,14 +462,14 @@ object Pipeline {
 
     // (b) mentions — scenario-dependent: a resume with a different scenario
     // must re-extract, not serve the previous scenario's spans
-    stage(paths.mentions, manifestField(paths.mentions, "scenario").contains(scenario)) {
+    stage(paths.mentions, "scenario", scenario) {
       TableFormat.save(extractMentions(labeled, scenario), paths.mentions, "doc_id", buckets,
         "mentions", extra = Map("scenario" -> scenario))
     }
     val mentions = TableFormat.load(spark, paths.mentions)
 
     // (c) linked (broadcast join — shuffle-free); dict-fingerprint-gated
-    stage(paths.linked, manifestField(paths.linked, "dict_fp").contains(dictFp)) {
+    stage(paths.linked, "dict_fp", dictFp) {
       TableFormat.save(Linker.link(mentions, dict), paths.linked, "doc_id", buckets,
         "linked", extra = Map("dict_fp" -> dictFp))
     }
@@ -480,7 +477,7 @@ object Pipeline {
 
     // (d) canonical entities (dict-only input, but kept on the linear dirty
     // chain — an unnecessary rebuild is cheap and the invariant stays simple)
-    stage(paths.entities, manifestField(paths.entities, "dict_fp").contains(dictFp)) {
+    stage(paths.entities, "dict_fp", dictFp) {
       TableFormat.save(Canonicalize.canonicalize(spark, dict), paths.entities, "entity_id", buckets,
         "entities", extra = Map("dict_fp" -> dictFp))
     }

@@ -39,12 +39,10 @@ object Compact {
       finally walk.close()
     }
 
-  private def listField(path: String, field: String): Seq[String] = {
-    val mf = Paths.get(path, "_manifest.json")
-    if (!Files.exists(mf)) Seq.empty
-    else s""""$field": "([^"]*)"""".r.findFirstMatchIn(Files.readString(mf))
-      .map(_.group(1)).filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty)
-  }
+  private def listField(path: String, field: String): Seq[String] =
+    if (!TableFormat.isComplete(path)) Seq.empty
+    else TableFormat.readManifest(path).fields.get(field)
+      .filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty)
 
   /** Identity of an epoch table. Epoch NAMES alone are not stable identities:
     * a stream whose checkpoint is cleared restarts epoch numbering at 0, so a

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot log over [[TableFormat]] data directories:
@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
   *    resolving as long as their dirs live — that is what makes time travel
   *    and incremental scans O(1) metadata operations, not data copies;
   *  - log: `_snapshots.jsonl`, one JSON object per line, rewritten atomically
-  *    (temp file + rename) on every commit. Single-writer by design — real
+  *    (temp file + rename) by [[TableFormat]] on every commit. Single-writer by design — real
   *    Iceberg arbitrates concurrent committers with optimistic locking on the
   *    catalog pointer; the pipeline's stage writers are single-owner per
   *    table, so a compare-and-swap on the rename is the swap-in point.
@@ -56,9 +56,6 @@ object Snapshots {
   final case class ColumnStats(col: String, typ: String, bounded: Boolean,
                                min: String, max: String, nulls: Long)
 
-  private val Log = "_snapshots.jsonl"
-  private val StatsFile = "_stats.jsonl"
-
   /** Append-only ingest commit: the new rows land in their own data dir; the
     * new snapshot references parent dirs + the new one. Returns the snapshot.
     * `op = "overwrite"` starts a fresh dir list (full rewrite semantics).
@@ -85,7 +82,7 @@ object Snapshots {
       else prior.lastOption.map(_.dirs).getOrElse(Vector.empty)
     // one uniform Snapshot.rows semantic (see the case-class doc): total
     // data-dir rows at this snapshot — parents' manifest counts + the new dir
-    val rows = (parentDirs :+ dirName).map(d => dirRows(s"$tableDir/$d")).sum
+    val rows = dirRows(tableDir, parentDirs :+ dirName)
     // an overwrite rewrites CURRENT content (deletes already applied by
     // load), so it also clears the delete list; appends carry it forward
     val parentDels =
@@ -93,23 +90,17 @@ object Snapshots {
       else prior.lastOption.map(_.dels).getOrElse(Vector.empty)
     val snap = Snapshot(id, prior.lastOption.map(_.id).getOrElse(0L), op,
       parentDirs :+ dirName, stage, rows, System.currentTimeMillis(), parentDels)
-    writeLog(tableDir, prior :+ snap)
+    TableFormat.writeSnapshotLog(tableDir, prior :+ snap)
     snap
   }
 
-  /** Row count of one data dir, from its TableFormat manifest (footer-priced
-    * at write time — never a data re-read). */
-  private def dirRows(dataDir: String): Long =
-    "\"rows\": (\\d+)".r
-      .findFirstMatchIn(Files.readString(Paths.get(dataDir, "_manifest.json")))
-      .map(_.group(1).toLong).getOrElse(0L)
+  /** Total row count of data dirs, from their TableFormat manifests
+    * (footer-priced at write time — never a data re-read). */
+  private def dirRows(tableDir: String, dirs: Seq[String]): Long =
+    dirs.map(d => TableFormat.readManifest(s"$tableDir/$d").rows).sum
 
   /** All snapshots, oldest first. Empty for a table that has never committed. */
-  def snapshots(tableDir: String): Vector[Snapshot] = {
-    val p = Paths.get(tableDir, Log)
-    if (!Files.exists(p)) Vector.empty
-    else Files.readAllLines(p).asScala.iterator.filter(_.nonEmpty).map(parseLine).toVector
-  }
+  def snapshots(tableDir: String): Vector[Snapshot] = TableFormat.readSnapshotLog(tableDir)
 
   def current(tableDir: String): Option[Snapshot] = snapshots(tableDir).lastOption
 
@@ -173,7 +164,7 @@ object Snapshots {
     }
     val row = df.agg(count(lit(1)).as("n"), aggs: _*).collect()(0)
     val empty = row.getAs[Long]("n") == 0L
-    val body = cols.zip(typs).map { case (c, t) =>
+    TableFormat.writeColumnStats(dataDir, cols.zip(typs).map { case (c, t) =>
       val nulls = if (empty) 0L else row.getAs[Long](s"nulls_$c")
       // `bounded` is the explicit no-non-null-value marker — a genuine
       // empty-string min must stay distinguishable from "no bounds"
@@ -181,10 +172,8 @@ object Snapshots {
       val (mn, mx) =
         if (!bounded) ("", "")
         else (row.getAs[String](s"min_$c"), row.getAs[String](s"max_$c"))
-      s"""{"col": "${esc(c)}", "type": "$t", "bounded": $bounded, """ +
-        s""""min": "${esc(mn)}", "max": "${esc(mx)}", "nulls": $nulls}"""
-    }.mkString("", "\n", "\n")
-    Files.writeString(Paths.get(dataDir, StatsFile), body)
+      ColumnStats(c, t, bounded, mn, mx, nulls)
+    })
   }
 
   /** The stats sidecar of one data dir, or None if it was committed without
@@ -192,12 +181,8 @@ object Snapshots {
     * A sidecar that fails to parse — older format, corruption — also reads
     * as None: unreadable stats must degrade to an UNPRUNED (correct, just
     * slower) scan, never to an unreadable table. */
-  def stats(tableDir: String, dirName: String): Option[Vector[ColumnStats]] = {
-    val p = Paths.get(tableDir, dirName, StatsFile)
-    if (!Files.exists(p)) None
-    else scala.util.Try(Files.readAllLines(p).asScala.iterator
-      .filter(_.nonEmpty).map(parseStatsLine).toVector).toOption
-  }
+  def stats(tableDir: String, dirName: String): Option[Vector[ColumnStats]] =
+    TableFormat.readColumnStats(s"$tableDir/$dirName")
 
   /** Scan planning with data skipping: of the snapshot's dirs, which can
     * contain a row with `col` in [lo, hi] (inclusive)? Returns (kept, all).
@@ -354,7 +339,7 @@ object Snapshots {
     // counts — masks not subtracted) carries the parent's value forward
     val snap = Snapshot(id, cur.id, "delete", cur.dirs, stage, cur.rows,
       System.currentTimeMillis(), cur.dels :+ dd)
-    writeLog(tableDir, prior :+ snap)
+    TableFormat.writeSnapshotLog(tableDir, prior :+ snap)
     snap
   }
 
@@ -484,10 +469,10 @@ object Snapshots {
         if (effStats.nonEmpty) writeStats(spark, s"$tableDir/$dd", effStats)
         dd
       }
-    val rows = newDirs.map(d => dirRows(s"$tableDir/$d")).sum
+    val rows = dirRows(tableDir, newDirs)
     val snap = Snapshot(id, cur.id, "merge", newDirs, stage, rows,
       System.currentTimeMillis())
-    writeLog(tableDir, prior :+ snap)
+    TableFormat.writeSnapshotLog(tableDir, prior :+ snap)
     snap
   }
 
@@ -524,10 +509,10 @@ object Snapshots {
       writeStats(spark, s"$tableDir/$dirName", wantStats)
       dirName
     }.toVector
-    val rows = dirs.map(d => dirRows(s"$tableDir/$d")).sum
+    val rows = dirRows(tableDir, dirs)
     val snap = Snapshot(id, prior.last.id, "overwrite", dirs, stage, rows,
       System.currentTimeMillis())
-    writeLog(tableDir, prior :+ snap)
+    TableFormat.writeSnapshotLog(tableDir, prior :+ snap)
     snap
   }
 
@@ -590,10 +575,10 @@ object Snapshots {
       writeStats(spark, s"$tableDir/$dirName", wantStats)
       dirName
     }.toVector
-    val rows = dirs.map(d => dirRows(s"$tableDir/$d")).sum
+    val rows = dirRows(tableDir, dirs)
     val snap = Snapshot(id, prior.last.id, "overwrite", dirs, stage, rows,
       System.currentTimeMillis())
-    writeLog(tableDir, prior :+ snap)
+    TableFormat.writeSnapshotLog(tableDir, prior :+ snap)
     snap
   }
 
@@ -651,7 +636,7 @@ object Snapshots {
     val (dead, live) = all.splitAt(all.size - keepLast)
     val liveDirs = live.flatMap(s => s.dirs ++ s.dels).toSet
     val orphans = dead.flatMap(s => s.dirs ++ s.dels).distinct.filterNot(liveDirs)
-    writeLog(tableDir, live)
+    TableFormat.writeSnapshotLog(tableDir, live)
     orphans.foreach { d =>
       val root = Paths.get(tableDir, d)
       if (Files.exists(root)) {
@@ -709,77 +694,4 @@ object Snapshots {
   private def dirSnapId(d: String): Long =
     "snap-(\\d+)".r.findFirstMatchIn(d).map(_.group(1).toLong)
       .getOrElse(throw new IllegalStateException(s"unparseable dir name: $d"))
-
-  // ---- log serialization (writer-controlled: stage is the only free-text
-  // field and it is escaped; everything else is numeric or enum) ----
-
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-
-  private def writeLog(tableDir: String, snaps: Seq[Snapshot]): Unit = {
-    val body = snaps.map { s =>
-      s"""{"id": ${s.id}, "parent": ${s.parentId}, "op": "${s.op}", """ +
-        s""""dirs": [${s.dirs.map(d => "\"" + d + "\"").mkString(", ")}], """ +
-        s""""dels": [${s.dels.map(d => "\"" + d + "\"").mkString(", ")}], """ +
-        s""""stage": "${esc(s.stage)}", "rows": ${s.rows}, "ts_ms": ${s.tsMs}}"""
-    }.mkString("", "\n", "\n")
-    Files.createDirectories(Paths.get(tableDir))
-    val tmp = Paths.get(tableDir, s".$Log.tmp")
-    Files.writeString(tmp, body)
-    try Files.move(tmp, Paths.get(tableDir, Log),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, Paths.get(tableDir, Log), StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  private val LineRe =
-    ("""\{"id": (\d+), "parent": (\d+), "op": "(\w+)", "dirs": \[([^\]]*)\], """ +
-     """(?:"dels": \[([^\]]*)\], )?""" + // absent in pre-MoR logs
-     """"stage": "((?:[^"\\]|\\.)*)", "rows": (\d+), "ts_ms": (\d+)\}""").r
-
-  private val StatsRe =
-    ("""\{"col": "((?:[^"\\]|\\.)*)", "type": "(\w+)", "bounded": (true|false), """ +
-     """"min": "((?:[^"\\]|\\.)*)", "max": "((?:[^"\\]|\\.)*)", "nulls": (\d+)\}""").r
-
-  /** Exact inverse of [[esc]] — including the \\uXXXX control-char form
-    * (an asymmetric unescape would leave control characters in string
-    * bounds escaped, and escaped text compares differently → wrong
-    * pruning). */
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(ch).append(other); i += 2
-        }
-      } else { sb.append(ch); i += 1 }
-    }
-    sb.toString
-  }
-
-  private def parseStatsLine(line: String): ColumnStats = line match {
-    case StatsRe(c, t, b, mn, mx, n) =>
-      ColumnStats(unesc(c), t, b.toBoolean, unesc(mn), unesc(mx), n.toLong)
-    case other =>
-      throw new IllegalStateException(s"malformed stats line: $other")
-  }
-
-  private def parseLine(line: String): Snapshot = line match {
-    case LineRe(id, parent, op, dirs, dels, stage, rows, ts) =>
-      def names(s: String): Vector[String] =
-        if (s == null) Vector.empty
-        else "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)).toVector
-      Snapshot(id.toLong, parent.toLong, op, names(dirs),
-        unesc(stage), rows.toLong, ts.toLong, names(dels))
-    case other =>
-      throw new IllegalStateException(s"malformed snapshot log line: $other")
-  }
 }

@@ -1,8 +1,11 @@
 package graft.io
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{AtomicMoveNotSupportedException, Files, Paths, Path}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-shaped table facade (SURVEY §7.5#2): the sandbox has no Iceberg jar,
@@ -14,10 +17,19 @@ import scala.jdk.CollectionConverters._
   * Swap-in point for real Iceberg: replace save/load with
   * `df.writeTo(table).partitionedBy(bucket(N, col))` — the call sites and the
   * bucketing column stay identical.
+  *
+  * This object is the one owner of the on-disk metadata: the table manifest,
+  * the [[Snapshots]] log and its per-dir stats sidecars are JSON documents
+  * built and parsed here with one Jackson mapper, published with one atomic
+  * rename, and every leaf directory name comes from [[leafPath]].
   */
 object TableFormat {
 
   val BucketCol = "part_bucket"
+
+  private val ManifestFile = "_manifest.json"
+  private val SnapshotLog = "_snapshots.jsonl"
+  private val StatsFile = "_stats.jsonl"
 
   /** Write `df` bucketed by xxhash64(keyCol) % buckets. Deterministic layout:
     * the same row lands in the same partition directory at any cluster size.
@@ -66,11 +78,11 @@ object TableFormat {
     * File-count discipline matches [[save]]: the repartition hashes exactly
     * the two layout columns, so every (value, bucket) combination lands on
     * one task → one file per leaf directory per stage, regardless of input
-    * parallelism. Per-partition lineage in the manifest is keyed by the full
-    * two-level path (`partCol=v/part_bucket=h`). `partCol` values must be
-    * directory-safe (the KG predicates are fixed identifiers); they come
-    * back as a string partition column on load, like Iceberg identity
-    * partitioning. */
+    * parallelism. Per-partition lineage in the manifest is keyed by the
+    * leaf's relative directory, [[leafPath]]. Any `partCol` value is legal:
+    * Spark path-escapes it in the directory name (`http://x` → `pred=http%3A%2F%2Fx`)
+    * and un-escapes it on load, where it comes back as a string partition
+    * column, like Iceberg identity partitioning. */
   def savePartitioned(df: DataFrame, path: String, partCol: String,
                       keyCol: String, buckets: Int = 32, stage: String = "",
                       extra: Map[String, String] = Map.empty): Unit = {
@@ -117,11 +129,11 @@ object TableFormat {
         .groupBy(lineageCols.map(col): _*).count()
         .collect()
         .map { r =>
-          // single-level layouts keep the bare-bucket key (existing manifest
-          // consumers parse it); two-level layouts key by the full leaf path
+          // single-level layouts keep the bare-bucket key; two-level layouts
+          // key by the leaf directory
           val k =
             if (lineageCols.size == 1) r.get(0).toString
-            else lineageCols.indices.map(i => s"${lineageCols(i)}=${r.get(i)}").mkString("/")
+            else leafPath(lineageCols.head, Option(r.get(0)).map(_.toString).orNull, r.getInt(1))
           (k, r.getLong(lineageCols.size))
         }
         .sortBy(_._1)
@@ -156,44 +168,56 @@ object TableFormat {
       } finally walk.close()
     }
 
+  /** Relative directory of one leaf of a [[savePartitioned]] table, named
+    * exactly as Spark's writer names it: each level is `col=value` with the
+    * value path-escaped by `ExternalCatalogUtils.getPartitionPathString`
+    * (`a"b` → `a%22b`; null or empty → Spark's default partition). It is
+    * also the leaf's lineage key in the manifest, so a key always names a
+    * directory that exists. Plain identifiers pass through unchanged. */
+  def leafPath(partCol: String, value: String, bucket: Int): String =
+    ExternalCatalogUtils.getPartitionPathString(partCol, value) + "/" +
+      ExternalCatalogUtils.getPartitionPathString(BucketCol, bucket.toString)
+
   /** Assemble + atomically publish a manifest from PRE-COMPUTED lineage
     * counts and file metrics. [[save]]/[[savePartitioned]] feed it a full
     * recount of what they just wrote; the update path
     * ([[graft.kg.Update.applyDelta]]) feeds it a MERGE — untouched leaves
     * inherit their write-time counts, touched leaves are re-counted — so a
-    * 10^12-row store's manifest refresh prices by the delta, not the table. */
+    * 10^12-row store's manifest refresh prices by the delta, not the table.
+    * The flat fields are JSON strings (untrusted text such as the HTTP
+    * surface's update_id stamp rides here); [[readManifest]] is the inverse. */
   private[graft] def publishManifest(path: String, fields: Map[String, String],
                                      counts: Seq[(String, Long)],
                                      nFiles: Long, nBytes: Long,
                                      writeMs: Long): Unit = {
-    val countsJson = counts.map { case (b, n) => s""""$b": $n""" }.mkString("{", ", ", "}")
-    val metrics = s"""{"rows": ${counts.map(_._2).sum}, "files": $nFiles, """ +
-      s""""bytes": $nBytes, "write_ms": $writeMs}"""
-    // Jackson-quote the flat fields: untrusted strings (the HTTP surface's
-    // update_id stamp) ride here, and an unescaped quote or control char
-    // would corrupt the store's completeness marker. readManifest decodes
-    // each field with the same mapper, the exact inverse.
-    val kv = (fields + ("wall_ms" -> System.currentTimeMillis().toString))
-      .map { case (k, v) => s"""${mapper.writeValueAsString(k)}: ${mapper.writeValueAsString(v)}""" }
-      .mkString(", ")
-    val json = s"""{$kv, "partition_rows": $countsJson, "metrics": $metrics, "complete": true}"""
-    // Atomic publish: the manifest is the stage's "complete" marker, so a
-    // crash mid-write must not leave a readable half manifest (resume would
-    // then trust a broken snapshot). Write to a temp name, fsync-free rename.
-    val tmp = Paths.get(path, "._manifest.json.tmp")
-    Files.writeString(tmp, json)
-    try Files.move(tmp, Paths.get(path, "_manifest.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, Paths.get(path, "_manifest.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val m = mapper.createObjectNode()
+    (fields + ("wall_ms" -> System.currentTimeMillis().toString))
+      .foreach { case (k, v) => m.put(k, v) }
+    val leaves = m.putObject("partition_rows")
+    counts.foreach { case (k, n) => leaves.put(k, n) }
+    m.putObject("metrics").put("rows", counts.map(_._2).sum).put("files", nFiles)
+      .put("bytes", nBytes).put("write_ms", writeMs)
+    m.put("complete", true)
+    publish(manifestFile(path), mapper.writeValueAsString(m))
   }
 
+  /** Atomic publish of one metadata file: the manifest is a stage's
+    * "complete" marker and the snapshot log names every live dir, so a crash
+    * mid-write must not leave a readable half file (resume or time travel
+    * would then trust a broken snapshot). Write a temp name, fsync-free
+    * rename over the target. */
+  private def publish(file: Path, text: String): Unit = {
+    Files.createDirectories(file.getParent)
+    val tmp = file.resolveSibling(s".${file.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    try Files.move(tmp, file, ATOMIC_MOVE, REPLACE_EXISTING)
+    catch { case _: AtomicMoveNotSupportedException => Files.move(tmp, file, REPLACE_EXISTING) }
+  }
+
+  private[graft] def manifestFile(path: String): Path = Paths.get(path, ManifestFile)
+
   /** True iff the path holds a complete snapshot (manifest present). */
-  def isComplete(path: String): Boolean =
-    Files.exists(Paths.get(path, "_manifest.json"))
+  def isComplete(path: String): Boolean = Files.exists(manifestFile(path))
 
   /** A parsed `_manifest.json`: the flat string fields (stage, bucket_key,
     * buckets, part_col, update lineage, …), the per-leaf row-count lineage,
@@ -202,13 +226,19 @@ object TableFormat {
                             leafRows: Seq[(String, Long)],
                             files: Long, bytes: Long) {
     def buckets: Int = fields.getOrElse("buckets", "32").toInt
+
+    def rows: Long = leafRows.map(_._2).sum
+
+    /** Rows per first-level value of a [[savePartitioned]] layout, summed
+      * over buckets — [[leafPath]] read backwards. */
+    def partRows: Map[String, Long] = leafRows.collect {
+      case (k, n) if k.contains('/') =>
+        ExternalCatalogUtils.unescapePathName(k.substring(k.indexOf('=') + 1, k.indexOf('/'))) -> n
+    }.groupMapReduce(_._1)(_._2)(_ + _)
   }
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private val manifestFieldRe =
-    """"([A-Za-z_][A-Za-z0-9_]*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  private val manifestLeafRe = """"([^"]+)"\s*:\s*(\d+)""".r
+  private val mapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** Read back what [[publishManifest]] wrote — the metadata half of the
     * table, one small JSON file, no scan. The update path starts here:
@@ -216,33 +246,23 @@ object TableFormat {
     * mapping, and the per-leaf counts are the lineage baseline the merged
     * manifest inherits for untouched leaves. */
   def readManifest(path: String): Manifest = {
-    val text = Files.readString(Paths.get(path, "_manifest.json"))
-    val fields = manifestFieldRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> mapper.readValue("\"" + m.group(2) + "\"", classOf[String])).toMap
-    def block(name: String): String = {
-      val at = text.indexOf(s""""$name"""")
-      if (at < 0) "{}"
-      else {
-        val open = text.indexOf('{', at)
-        val close = text.indexOf('}', open) // leaf keys/values never nest
-        text.substring(open, close + 1)
-      }
-    }
-    val leaves = manifestLeafRe.findAllMatchIn(block("partition_rows"))
-      .map(m => m.group(1) -> m.group(2).toLong).toSeq
-    val met = manifestLeafRe.findAllMatchIn(block("metrics"))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    Manifest(fields, leaves, met.getOrElse("files", 0L), met.getOrElse("bytes", 0L))
+    val root = mapper.readTree(Files.readString(manifestFile(path)))
+    def longs(name: String): Seq[(String, Long)] =
+      Option(root.get(name)).toSeq.flatMap(_.properties().asScala.toSeq)
+        .map(e => e.getKey -> e.getValue.longValue)
+    val fields = root.properties().asScala.collect {
+      case e if e.getValue.isTextual => e.getKey -> e.getValue.textValue
+    }.toMap
+    val met = longs("metrics").toMap
+    Manifest(fields, longs("partition_rows"), met.getOrElse("files", 0L), met.getOrElse("bytes", 0L))
   }
 
   /** The manifest's wall_ms completion stamp. Fails loudly on a missing or
     * malformed manifest — a silent 0 would make the NEXT stage's computed
     * wall ≈ the whole epoch and poison any timing breakdown built on it. */
   def manifestWallMs(path: String): Long =
-    "\"wall_ms\": \"(\\d+)\"".r
-      .findFirstMatchIn(Files.readString(Paths.get(path, "_manifest.json")))
-      .getOrElse(throw new IllegalStateException(s"no wall_ms in $path/_manifest.json"))
-      .group(1).toLong
+    readManifest(path).fields.get("wall_ms").map(_.toLong)
+      .getOrElse(throw new IllegalStateException(s"no wall_ms in ${manifestFile(path)}"))
 
   /** Per-stage wall seconds from consecutive manifest completion stamps
     * (shared by Bench's e2e breakdown and tools/E2eProbe — one parser, one
@@ -251,6 +271,56 @@ object TableFormat {
     val ends = stages.map(st => manifestWallMs(s"$workDir/$st"))
     stages.zip((startMs +: ends).sliding(2).map(p => math.max(p(1) - p(0), 0L) / 1e3).toSeq)
   }
+
+  // ---- the Snapshots log and stats sidecars: one JSON object per line ----
+
+  /** All snapshots of `tableDir`, oldest first; empty before the first
+    * commit. A pre-merge-on-read line without `dels` reads with none. */
+  private[io] def readSnapshotLog(tableDir: String): Vector[Snapshots.Snapshot] =
+    jsonLines(Paths.get(tableDir, SnapshotLog)).map { n =>
+      def names(k: String) = Option(n.get(k)).toVector.flatMap(_.asScala.map(_.textValue))
+      Snapshots.Snapshot(num(n, "id"), num(n, "parent"), str(n, "op"), names("dirs"),
+        str(n, "stage"), num(n, "rows"), num(n, "ts_ms"), names("dels"))
+    }
+
+  private[io] def writeSnapshotLog(tableDir: String, snaps: Seq[Snapshots.Snapshot]): Unit =
+    publish(Paths.get(tableDir, SnapshotLog), snaps.map { s =>
+      val n = mapper.createObjectNode().put("id", s.id).put("parent", s.parentId).put("op", s.op)
+      s.dirs.foldLeft(n.putArray("dirs"))(_.add(_))
+      s.dels.foldLeft(n.putArray("dels"))(_.add(_))
+      mapper.writeValueAsString(n.put("stage", s.stage).put("rows", s.rows).put("ts_ms", s.tsMs))
+    }.mkString("", "\n", "\n"))
+
+  /** One data dir's column-stats sidecar; None when it is absent or fails
+    * to parse (see [[Snapshots.stats]]). */
+  private[io] def readColumnStats(dataDir: String): Option[Vector[Snapshots.ColumnStats]] = {
+    val p = Paths.get(dataDir, StatsFile)
+    if (!Files.exists(p)) None
+    else scala.util.Try(jsonLines(p).map { n =>
+      Snapshots.ColumnStats(str(n, "col"), str(n, "type"), req(n, "bounded", _.isBoolean).booleanValue,
+        str(n, "min"), str(n, "max"), num(n, "nulls"))
+    }).toOption
+  }
+
+  private[io] def writeColumnStats(dataDir: String, stats: Seq[Snapshots.ColumnStats]): Unit =
+    publish(Paths.get(dataDir, StatsFile), stats.map { c =>
+      mapper.writeValueAsString(mapper.createObjectNode().put("col", c.col).put("type", c.typ)
+        .put("bounded", c.bounded).put("min", c.min).put("max", c.max).put("nulls", c.nulls))
+    }.mkString("", "\n", "\n"))
+
+  private def jsonLines(p: Path): Vector[JsonNode] =
+    if (!Files.exists(p)) Vector.empty
+    else Files.readAllLines(p).asScala.iterator.filter(_.nonEmpty).map(l => mapper.readTree(l)).toVector
+
+  /** Field `k` of `n`, which must exist and pass `ok` — a line missing a
+    * field or holding the wrong type fails loudly instead of defaulting. */
+  private def req(n: JsonNode, k: String, ok: JsonNode => Boolean): JsonNode = {
+    val v = n.required(k)
+    require(ok(v), s"field '$k' has the wrong type in $n")
+    v
+  }
+  private def str(n: JsonNode, k: String): String = req(n, k, _.isTextual).textValue
+  private def num(n: JsonNode, k: String): Long = req(n, k, _.isIntegralNumber).longValue
 
   /** Load a table previously written by save (drops the bucket column).
     * An empty table (no part files) reconstructs from the schema snapshot. */

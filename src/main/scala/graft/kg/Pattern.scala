@@ -136,18 +136,13 @@ object Pattern {
 
   /** [[predStats]] from a TableFormat.savePartitioned store's
     * `_manifest.json` — a metadata READ (one small JSON file), no table
-    * scan: the per-partition lineage the north rule requires is keyed
-    * `pred=X/part_bucket=N → rows`, so summing over buckets per predicate
-    * IS the cost model's input. At 10^12 triples this is the only sane
-    * source — the stats are a byproduct of the write that built the store. */
-  def predStatsFromManifest(storePath: String): Map[String, Long] = {
-    val text = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(storePath, "_manifest.json"))
-    val entry = """"pred=([^/"]+)/[^"]*"\s*:\s*(\d+)""".r
-    entry.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).toLong).toSeq
-      .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).sum }
-  }
+    * scan: the per-partition lineage the north rule requires is keyed by
+    * leaf directory (`pred=X/part_bucket=N → rows`), so summing over buckets
+    * per predicate IS the cost model's input. At 10^12 triples this is the
+    * only sane source — the stats are a byproduct of the write that built
+    * the store. */
+  def predStatsFromManifest(storePath: String): Map[String, Long] =
+    graft.io.TableFormat.readManifest(storePath).partRows
 
   /** Greedy selectivity order for a BGP fold. Cost model: a pattern's
     * estimate is its predicate's triple count (constant pred → that

@@ -15,7 +15,11 @@ import scala.jdk.CollectionConverters._
   * update names a delta — triples to delete, triples to insert. The store
   * layout `pred=v/part_bucket=h` (h = xxhash64(subj) % buckets) pins every
   * triple to exactly ONE leaf directory, so the delta's leaf set is
-  * computable from the delta alone. The rewrite then
+  * computable from the delta alone. Leaf directories and their lineage keys
+  * are both [[graft.io.TableFormat.leafPath]], Spark's own partition-path
+  * escaping, so a predicate such as `http://schema.org/name` names the
+  * directory Spark wrote (`pred=http%3A%2F%2Fschema.org%2Fname`). The
+  * rewrite then
   *
   *  1. reads ONLY the touched leaves (both partition columns constrained →
   *     the scan partition-prunes to those directories),
@@ -114,9 +118,8 @@ object Update {
       .unionByName(ins.select(col("pred"), leafOf.as(bcol)))
       .distinct()
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-    def leafKey(pb: (String, Int)) = s"pred=${pb._1}/$bcol=${pb._2}"
-    def leafDir(pb: (String, Int)): Path =
-      Paths.get(storePath, s"pred=${pb._1}", s"$bcol=${pb._2}")
+    def leafKey(pb: (String, Int)) = TableFormat.leafPath("pred", pb._1, pb._2)
+    def leafDir(pb: (String, Int)): Path = Paths.get(storePath, leafKey(pb))
 
     if (touched.isEmpty) {
       if (extraFields.nonEmpty)

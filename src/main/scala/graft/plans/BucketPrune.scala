@@ -63,19 +63,17 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  private val KeyRe = """"bucket_key": "([^"]+)"""".r
-  private val NRe = """"buckets": "(\d+)"""".r
-
   /** (bucket key column, modulus) from the table dir's manifest, or None.
     * Re-parsed whenever the manifest's mtime changes (re-save of the same
-    * path); a missing/unreadable manifest is cached as None with mtime 0. */
+    * path); a missing manifest is cached as None with mtime 0, and an
+    * unreadable one reads as None — the optimizer must never throw. */
   private def bucketMeta(rel: LogicalRelation): Option[(String, Int)] =
     rel.relation match {
       case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 =>
         val root = fs.location.rootPaths.head.toString
         try {
-          val dir = java.nio.file.Paths.get(new java.net.URI(root).getPath)
-          val mf = dir.resolve("_manifest.json")
+          val dir = new java.net.URI(root).getPath
+          val mf = TableFormat.manifestFile(dir)
           val stamp =
             if (java.nio.file.Files.exists(mf))
               (java.nio.file.Files.getLastModifiedTime(mf).toMillis,
@@ -87,11 +85,8 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
             val meta =
               if (stamp == (0L, 0L)) None
               else {
-                val txt = java.nio.file.Files.readString(mf)
-                for {
-                  k <- KeyRe.findFirstMatchIn(txt).map(_.group(1))
-                  n <- NRe.findFirstMatchIn(txt).map(_.group(1).toInt)
-                } yield (k, n)
+                val f = TableFormat.readManifest(dir).fields
+                for (k <- f.get("bucket_key"); n <- f.get("buckets")) yield (k, n.toInt)
               }
             metaCache.put(root, (stamp, meta))
             meta

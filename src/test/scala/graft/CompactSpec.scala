@@ -41,11 +41,8 @@ class CompactSpec extends AnyFunSuite {
     assert(baseRows(base) === Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
-  private def epochStamp(stream: String, n: Long): String = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$stream/epoch=$n", "_manifest.json"))
-    """"wall_ms": "(\d+)"""".r.findFirstMatchIn(txt).get.group(1)
-  }
+  private def epochStamp(stream: String, n: Long): String =
+    SparkTestBase.manifestJson(s"$stream/epoch=$n").get("wall_ms").textValue
 
   private def copyDir(from: String, to: String): Unit = {
     import scala.jdk.CollectionConverters._

@@ -72,10 +72,7 @@ class CurateSpec extends AnyFunSuite {
     Curate.runAll(spark, corpus, dir, buckets = 4,
       sampleRateBp = Some(lit(10000L)))
     val paths = Curate.StagePaths(dir)
-    def manifestMs(p: String): String = {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(p, "_manifest.json"))
-      """"wall_ms": "(\d+)"""".r.findFirstMatchIn(txt).get.group(1)
-    }
+    def manifestMs(p: String): String = SparkTestBase.manifestJson(p).get("wall_ms").textValue
     val before = paths.all.dropRight(1).map(manifestMs)
     // nuke only the final stage; resume must rebuild it and ONLY it
     def rmrf(p: java.nio.file.Path): Unit = {
@@ -96,10 +93,7 @@ class CurateSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("curate").toString
     Curate.runAll(spark, corpus, dir, buckets = 4, sampleRateBp = Some(lit(10000L)))
     val paths = Curate.StagePaths(dir)
-    def manifestMs(p: String): String = {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(p, "_manifest.json"))
-      """"wall_ms": "(\d+)"""".r.findFirstMatchIn(txt).get.group(1)
-    }
+    def manifestMs(p: String): String = SparkTestBase.manifestJson(p).get("wall_ms").textValue
     val upstreamBefore = Seq(paths.verdicts, paths.deduped, paths.clusters).map(manifestMs)
     val packedBefore = manifestMs(paths.packed)
     def rmrf(p: java.nio.file.Path): Unit = {

@@ -318,10 +318,11 @@ class PatternSpec extends AnyFunSuite {
 
     // manifest: two-level lineage keys, counts sum to the row count, one
     // file per leaf directory (the small-files discipline)
-    val mf = java.nio.file.Files.readString(java.nio.file.Paths.get(store, "_manifest.json"))
-    assert(mf.contains("\"part_col\": \"pred\"") && mf.contains("\"complete\": true"))
-    val lineage = """"(pred=[^"]+/part_bucket=\d+)": (\d+)""".r
-      .findAllMatchIn(mf).map(m => m.group(1) -> m.group(2).toLong).toSeq
+    val mf = SparkTestBase.manifestJson(store)
+    assert(mf.get("part_col").textValue == "pred" && mf.get("complete").booleanValue)
+    val lineage = mf.get("partition_rows").properties().asScala.toSeq
+      .map(e => e.getKey -> e.getValue.longValue)
+      .filter(_._1.matches("""pred=[^"]+/part_bucket=\d+"""))
     assert(lineage.map(_._2).sum === trip.count())
     val leafFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
       .iterator().asScala

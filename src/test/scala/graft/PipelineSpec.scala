@@ -230,9 +230,8 @@ class PipelineSpec extends AnyFunSuite {
     val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
     val docs = spark.createDataset(Fixtures.inputDocs(10))
     def mf(stage: String, field: String): String =
-      s""""$field": "([^"]*)"""".r.findFirstMatchIn(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$work/$stage", "_manifest.json"))).map(_.group(1))
-        .getOrElse(fail(s"no $field in $stage manifest"))
+      Option(SparkTestBase.manifestJson(s"$work/$stage").get(field)).filter(_.isTextual)
+        .map(_.textValue).getOrElse(fail(s"no $field in $stage manifest"))
     Pipeline.runAll(spark, docs, dict, work, buckets = 2)
     val defaultFp = Pipeline.fixtureModels().fingerprint
     assert(mf("docs_labeled", "models_fp") === defaultFp)
@@ -299,17 +298,17 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     TableFormat.save((0L until 100L).map(i => (i, s"v$i")).toDF("doc_id", "v"),
       work, "doc_id", buckets = 4, stage = "m")
-    val mf = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(work, "_manifest.json"))
-    val metrics = """"metrics": \{"rows": (\d+), "files": (\d+), "bytes": (\d+), "write_ms": (\d+)\}""".r
-      .findFirstMatchIn(mf).getOrElse(fail(s"no metrics in $mf"))
-    assert(metrics.group(1).toLong === 100L)       // rows == lineage total
-    assert(metrics.group(2).toLong === 4L)         // one file per bucket
-    assert(metrics.group(3).toLong > 0L)           // bytes counted
+    val mf = SparkTestBase.manifestJson(work)
+    val metrics = Option(mf.get("metrics")).getOrElse(fail(s"no metrics in $mf"))
+    assert(Seq("rows", "files", "bytes", "write_ms").forall(k =>
+      Option(metrics.get(k)).exists(_.isIntegralNumber)), s"metrics incomplete: $metrics")
+    assert(metrics.get("rows").longValue === 100L)  // rows == lineage total
+    assert(metrics.get("files").longValue === 4L)   // one file per bucket
+    assert(metrics.get("bytes").longValue > 0L)     // bytes counted
     // lineage counts still present and summing to the same total
-    val partRows = """": (\d+)[,}]""".r.findAllMatchIn(
-      """"partition_rows": \{([^}]*)\}""".r.findFirstMatchIn(mf).get.group(1) + "}")
-      .map(_.group(1).toLong).sum
+    import scala.jdk.CollectionConverters._
+    val partRows = mf.get("partition_rows").properties().asScala.toSeq
+      .map(_.getValue.longValue).sum
     assert(partRows === 100L)
     def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
     rm(new java.io.File(work))

@@ -360,6 +360,63 @@ class SnapshotSpec extends AnyFunSuite {
     rm(new java.io.File(dir))
   }
 
+  test("metadata written in the earlier byte format (spaces after ':' and ',') still reads") {
+    import java.nio.file.{Files, Paths}
+    val dir = tmp("graft-compat")
+    // a manifest exactly as the string-built writer laid it out
+    val store = s"$dir/store"
+    Files.createDirectories(Paths.get(store))
+    Files.writeString(Paths.get(store, "_manifest.json"),
+      """{"stage": "triples", "bucket_key": "subj", "buckets": "4", "part_col": "pred", """ +
+      """"wall_ms": "1700000000123", "partition_rows": {"pred=inDoc/part_bucket=0": 3, """ +
+      """"pred=inDoc/part_bucket=3": 2, "pred=label/part_bucket=1": 5}, """ +
+      """"metrics": {"rows": 10, "files": 3, "bytes": 4096, "write_ms": 17}, "complete": true}""")
+    val m = TableFormat.readManifest(store)
+    assert(m.fields === Map("stage" -> "triples", "bucket_key" -> "subj", "buckets" -> "4",
+      "part_col" -> "pred", "wall_ms" -> "1700000000123"))
+    assert(m.leafRows === Seq("pred=inDoc/part_bucket=0" -> 3L,
+      "pred=inDoc/part_bucket=3" -> 2L, "pred=label/part_bucket=1" -> 5L))
+    assert(m.files === 3L && m.bytes === 4096L && m.buckets === 4)
+    assert(graft.kg.Pattern.predStatsFromManifest(store) === Map("inDoc" -> 5L, "label" -> 5L))
+    assert(TableFormat.manifestWallMs(store) === 1700000000123L)
+
+    // a snapshot log line from before merge-on-read deletes: no "dels"
+    val t = s"$dir/tbl"
+    val s1 = Snapshots.commit((0L until 6L).map(i => (i, s"v$i")).toDF("id", "v"),
+      t, "id", buckets = 2, stage = "b\"1", statsCols = Seq("id", "v"))
+    Files.writeString(Paths.get(t, "_snapshots.jsonl"),
+      s"""{"id": 1, "parent": 0, "op": "append", "dirs": ["snap-000001"], """ +
+      s""""stage": "b\\"1", "rows": 6, "ts_ms": ${s1.tsMs}}\n""")
+    assert(Snapshots.snapshots(t) === Vector(s1))
+    assert(Snapshots.load(spark, t).count() === 6L)
+
+    // a stats sidecar line in the same earlier layout reads back unchanged
+    val s1Stats = Paths.get(t, "snap-000001", "_stats.jsonl")
+    val written = Snapshots.stats(t, "snap-000001").get
+    Files.writeString(s1Stats,
+      """{"col": "id", "type": "long", "bounded": true, "min": "0", "max": "5", "nulls": 0}""" +
+      "\n" +
+      """{"col": "v", "type": "string", "bounded": true, "min": "v0", "max": "v5", "nulls": 0}""" +
+      "\n")
+    assert(Snapshots.stats(t, "snap-000001") === Some(written))
+
+    // a corrupt sidecar reads as None, and the pruned scan still equals the
+    // unpruned filter (the dir is kept, never pruned wrongly)
+    Snapshots.commit((100L until 104L).map(i => (i, s"w$i")).toDF("id", "v"),
+      t, "id", buckets = 2, stage = "b2", statsCols = Seq("id"))
+    Files.writeString(Paths.get(t, "snap-000002", "_stats.jsonl"),
+      """{"col": "id", "type": "long", "bounded": tr""")
+    assert(Snapshots.stats(t, "snap-000002") === None)
+    for ((lo, hi) <- Seq((2L, 4L), (101L, 102L), (50L, 60L))) {
+      val pruned = Snapshots.loadPruned(spark, t, "id", lo, hi).as[(Long, String)].collect().toSet
+      val full = Snapshots.load(spark, t).filter(col("id").between(lo, hi))
+        .as[(Long, String)].collect().toSet
+      assert(pruned === full, s"[$lo, $hi]")
+    }
+    assert(Snapshots.pruneDirs(t, "id", 101L, 102L)._1 === Vector("snap-000002"))
+    rm(new java.io.File(dir))
+  }
+
   test("clustered rewrite: second-column pruning, null routing, history intact") {
     val dir = tmp("graft-clus")
     val t = s"$dir/tbl"

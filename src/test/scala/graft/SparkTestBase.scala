@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -16,4 +17,9 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A table's `_manifest.json` parsed by a plain Jackson mapper, not by
+    * `TableFormat.readManifest`: tests check the file, not the reader. */
+  def manifestJson(dir: String): JsonNode = new ObjectMapper().readTree(
+    java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "_manifest.json")))
 }
