@@ -27,7 +27,7 @@ object Bench {
     }
   }
 
-  private def session(cpus: Int): SparkSession = {
+  private[graft] def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

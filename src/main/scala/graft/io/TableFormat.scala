@@ -265,8 +265,8 @@ object TableFormat {
       .getOrElse(throw new IllegalStateException(s"no wall_ms in ${manifestFile(path)}"))
 
   /** Per-stage wall seconds from consecutive manifest completion stamps
-    * (shared by Bench's e2e breakdown and tools/E2eProbe — one parser, one
-    * semantics). */
+    * (shared by Bench's e2e breakdown and perfbench's build workload — one
+    * parser, one semantics). */
   def stageWallsSec(workDir: String, stages: Seq[String], startMs: Long): Seq[(String, Double)] = {
     val ends = stages.map(st => manifestWallMs(s"$workDir/$st"))
     stages.zip((startMs +: ends).sliding(2).map(p => math.max(p(1) - p(0), 0L) / 1e3).toSeq)

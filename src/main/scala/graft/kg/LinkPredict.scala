@@ -48,7 +48,7 @@ object LinkPredict {
     val adj = e.select(col("pa").as("v"), col("pb").as("n"))
       .union(e.select(col("pb").as("v"), col("pa").as("n")))
     // cap applies to the PIVOT v; filtering adj once covers both wedge arms.
-    // Wedge shape A/B (tools/LpProbe, sf0.1, 18.3M wedges): this codegen'd
+    // Wedge shape A/B (sf0.1, 18.3M wedges; BENCH/NOTES.md): this codegen'd
     // self-join + hash aggregate runs the candidate stage in 4.4 s; the
     // collect_list + transform/slice pair-expansion alternative takes 25.6 s
     // — Catalyst higher-order functions evaluate INTERPRETED, so the per-

@@ -1,67 +1,144 @@
 package graft.tools
 
-import graft.{Pipeline, SparkEntry}
-import graft.fixtures.Fixtures
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.{Bench, SparkEntry}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
-/** Stage-level profiling of the bench workload at two parallelism levels —
-  * development tool for chasing scaling-efficiency regressions. */
+/** The profiling entry point for registered queries, on the session
+  * [[Bench]] times them in (AQE, skew join, UTC, `GraftExtensions`):
+  *
+  *   `SPARK_GRAFT_CPUS=4 sbt "runMain graft.tools.Profile <sfDir> [--reps N] [--plans] [query...]"`
+  *
+  * With no query named it runs every registered query. Timing runs each
+  * query `--reps` times in a row (default 4) and prints rep 1 on its own —
+  * it is cold: JIT, and the session artifacts (IVF/PQ indexes, the annotate
+  * cache) a query builds on first use — then the min, median and spread
+  * (max − min) of the warm reps. `--plans` runs each query once and prints
+  * the formatted final plan of every SQL execution the run raised, in
+  * order; a `localCheckpoint` cut raises its own execution, so the plan
+  * behind the cut is there too, not only the post-cut `Scan ExistingRDD`.
+  *
+  * Every run writes to the `noop` sink: every column of every row is
+  * computed (a `count` may prune columns) and the sink costs nothing. An
+  * unknown name fails before the session starts; a failing query prints
+  * `FAILED`, the rest still run, and the exit status is non-zero. */
 object Profile {
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** The named queries in the order named, or every query sorted by name
+    * when none is; an unknown name fails here, before anything runs. */
+  private def resolve(names: Seq[String]): Seq[(String, Query)] = {
+    val registry = SparkEntry.queries
+    val unknown = names.filterNot(registry.contains)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) registry.toSeq.sortBy(_._1) else names.map(n => n -> registry(n))
   }
 
-  /** Single-thread pure-Scala run of the annotate body (no Spark, no encoder):
-    * isolates NLP-inner-loop cost from Dataset serialization overhead. */
-  def localLoop(nDocs: Int): (Double, Long) = {
-    val m = SparkEntry.fixtureModels
-    val lex = m.lexPredicate
-    val t0 = System.nanoTime()
-    var i = 0
-    var acc = 0L
-    while (i < nDocs) {
-      val fd = Fixtures.doc(i)
-      val doc = Pipeline.annotateDoc(m, lex, graft.schema.InputDoc(fd.docId, fd.spans.toArray))
-      acc += doc.sents.length
-      i += 1
+  private def run(spark: SparkSession, sfDir: String, q: Query): Unit =
+    q(spark, sfDir).write.format("noop").mode("overwrite").save()
+
+  /** Wall seconds of `reps` consecutive runs of each query. Names are
+    * checked at the call; each query runs as the iterator reaches it. */
+  def time(spark: SparkSession, sfDir: String, names: Seq[String],
+           reps: Int): Iterator[(String, Try[Seq[Double]])] = {
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    resolve(names).iterator.map { case (name, q) =>
+      name -> Try((1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        run(spark, sfDir, q)
+        (System.nanoTime() - t0) / 1e9
+      })
     }
-    ((System.nanoTime() - t0) / 1e9, acc)
   }
+
+  /** The formatted final plans of the SQL executions one run of each query
+    * raises, in order. Names are checked at the call; each query runs as
+    * the iterator reaches it. */
+  def plans(spark: SparkSession, sfDir: String,
+            names: Seq[String]): Iterator[(String, Try[Seq[String]])] =
+    resolve(names).iterator.map { case (name, q) =>
+      name -> Try(capture(spark)(run(spark, sfDir, q)))
+    }
+
+  private def capture(spark: SparkSession)(action: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(qe); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    // the bus is asynchronous: drained before registering, no earlier
+    // execution reaches the listener; drained after the action, every
+    // execution the action raised has
+    ListenerBusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { action; ListenerBusDrain.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq.map(_.explainString(FormattedMode))
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  private val usage = "usage: Profile <sfDir> [--reps N] [--plans] [query...]"
 
   def main(args: Array[String]): Unit = {
-    val nDocs = if (args.nonEmpty) args(0).toInt else 40000
-    val parts = 256
-    localLoop(3000) // JIT warm the pure loop
-    val (secLocal, _) = localLoop(20000)
-    println(f"[profile] local-loop single-thread: $secLocal%.2f s for 20000 docs = ${20000 / secLocal}%.0f docs/s/thread")
-    // full JIT warmup BEFORE any timing, on a throwaway session
-    locally {
-      val spark = session(32)
-      val models = spark.sparkContext.broadcast(SparkEntry.fixtureModels)
-      for (_ <- 0 until 3)
-        Pipeline.extractMentions(Pipeline.annotate(spark, Fixtures.inputDocsDs(spark, 8000, parts), models), "morph").count()
-      spark.stop()
+    var reps = 4
+    var showPlans = false
+    val positional = Seq.newBuilder[String]
+    def parse(rest: List[String]): Unit = rest match {
+      case "--reps" :: n :: tail =>
+        reps = n.toIntOption.filter(_ >= 1)
+          .getOrElse(throw new IllegalArgumentException(s"--reps needs a positive integer, got $n"))
+        parse(tail)
+      case "--plans" :: tail => showPlans = true; parse(tail)
+      case opt :: _ if opt.startsWith("--") =>
+        throw new IllegalArgumentException(s"unknown option $opt; $usage")
+      case arg :: tail => positional += arg; parse(tail)
+      case Nil =>
     }
-    for (cpus <- Seq(8, 32)) {
-      val spark = session(cpus)
-      val models = spark.sparkContext.broadcast(SparkEntry.fixtureModels)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"[profile] cpus=$cpus $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s (n=$n)")
-      }
-      Pipeline.extractMentions(Pipeline.annotate(spark, Fixtures.inputDocsDs(spark, 2000, parts), models), "morph").count()
-      for (i <- 1 to 3)
-        time(s"pipeline-e2e-$i")(Pipeline.extractMentions(Pipeline.annotate(spark, Fixtures.inputDocsDs(spark, nDocs, parts), models), "morph").count())
-      time("annotate-only")(Pipeline.annotate(spark, Fixtures.inputDocsDs(spark, nDocs, parts), models).count())
-      spark.stop()
+    parse(args.toList)
+    val (sfDir, queries) = positional.result() match {
+      case dir +: names => (dir, names)
+      case _ => throw new IllegalArgumentException(usage)
+    }
+    resolve(queries) // unknown names fail before the session starts
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    def report[A](name: String, result: Try[A])(show: A => Unit): Boolean = result match {
+      case Success(a) => show(a); false
+      case Failure(e) => println(s"[profile] $name FAILED: ${e.getMessage}"); true
+    }
+    val failed = try {
+      if (showPlans) plans(spark, sfDir, queries).map { case (name, r) =>
+        report(name, r) { ps =>
+          ps.zipWithIndex.foreach { case (p, i) =>
+            println(s"\n========== $name [${i + 1}/${ps.size}] ==========\n$p")
+          }
+        }
+      }.count(identity)
+      else time(spark, sfDir, queries, reps).map { case (name, r) =>
+        report(name, r) { walls =>
+          val warm = walls.tail
+          val stats =
+            if (warm.isEmpty) ""
+            else f"  warm min=${warm.min}%.3fs median=${median(warm)}%.3fs " +
+              f"spread=${warm.max - warm.min}%.3fs (${warm.size} reps)"
+          println(f"[profile] $name%-28s cold=${walls.head}%.3fs$stats")
+        }
+      }.count(identity)
+    } finally spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[profile] $failed queries FAILED")
+      sys.exit(1)
     }
   }
 }
