@@ -429,7 +429,7 @@ object Bench {
         val work = java.nio.file.Files.createTempDirectory("graft-e2e").toString
         val t0ms = System.currentTimeMillis()
         val t0 = System.nanoTime()
-        val nT = Pipeline.runAll(s, docs, dict, work, buckets = cpus, resume = false).count()
+        val nT = Pipeline.runAll(s, docs, dict, work, buckets = Some(cpus), resume = false).count()
         val sec = (System.nanoTime() - t0) / 1e9
         // per-stage breakdown from the manifests' completion timestamps
         // (shared parser: TableFormat.stageWallsSec — fails loudly on a

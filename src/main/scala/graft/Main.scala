@@ -73,7 +73,7 @@ object Main {
       if (args.length > 4) spark.read.parquet(args(4))
       else spark.createDataset(fixtures.Fixtures.entityDictionary()).toDF()
 
-    val triples = Pipeline.runAll(spark, docs, dict, workDir, scenario, buckets)
+    val triples = Pipeline.runAll(spark, docs, dict, workDir, scenario, Some(buckets))
     println(s"[graft] triples written: ${triples.count()} rows under $workDir/triples")
     spark.stop()
   }

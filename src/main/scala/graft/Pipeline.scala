@@ -419,14 +419,24 @@ object Pipeline {
     * `models` injects the NER/MD model set — a user brings real weights (the
     * reference loads arbitrary .model/.dset pairs, utils/data.py:342-351,
     * api_main.py:53-70) by constructing a [[Models]] (e.g. from NerModel
-    * loaders or [[fixtureRegistry]] entries); the default is the fixture set. */
+    * loaders or [[fixtureRegistry]] entries); the default is the fixture set.
+    *
+    * `buckets` fixes every stage's bucket count. Without it each stage is
+    * sized by its input: ceil(input bytes / `spark.sql.files.maxPartitionBytes`)
+    * buckets, clamped to [1, 1024]. A stage fed by an earlier one reads that
+    * stage's exact manifest `bytes`; the two fed by the caller (`docs`,
+    * `dict`) use the optimizer's size estimate of that input. No join's
+    * estimate is used: it can be far larger than the data. An input the
+    * optimizer cannot size, such as an RDD-backed Dataset, reports
+    * `spark.sql.defaultSizeInBytes` and gets the 1024-bucket maximum, so
+    * pass `buckets` with one. */
   def runAll(
       spark: SparkSession,
       docs: Dataset[InputDoc],
       dict: DataFrame,
       workDir: String,
       scenario: String = "morph",
-      buckets: Int = 32,
+      buckets: Option[Int] = None,
       resume: Boolean = true,
       models: Models = fixtureModels()): DataFrame = {
     import spark.implicits._
@@ -451,11 +461,17 @@ object Pipeline {
     // of the dict, so resuming with a DIFFERENT dictionary must rebuild them
     // (same contract as models_fp).
     val dictFp = dictFingerprint(dict)
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    def sized(inputBytes: => Long): Int =
+      buckets.getOrElse(TableFormat.adaptiveBuckets(inputBytes, maxBytes))
+    def planBytes(in: Dataset[_]): Long =
+      in.queryExecution.optimizedPlan.stats.sizeInBytes.min(Long.MaxValue).toLong
+    def tableBytes(stages: String*): Long = stages.map(TableFormat.readManifest(_).bytes).sum
 
     // (a) docs_labeled — model-dependent: fingerprint gates the resume
     stage(paths.docsLabeled, "models_fp", fp) {
       val annotated = annotate(spark, docs, modelsBc)
-      TableFormat.save(annotated.toDF(), paths.docsLabeled, "doc_id", buckets,
+      TableFormat.save(annotated.toDF(), paths.docsLabeled, "doc_id", sized(planBytes(docs)),
         "docs_labeled", extra = Map("models_fp" -> fp))
     }
     val labeled = TableFormat.load(spark, paths.docsLabeled).as[Doc]
@@ -463,14 +479,16 @@ object Pipeline {
     // (b) mentions — scenario-dependent: a resume with a different scenario
     // must re-extract, not serve the previous scenario's spans
     stage(paths.mentions, "scenario", scenario) {
-      TableFormat.save(extractMentions(labeled, scenario), paths.mentions, "doc_id", buckets,
+      TableFormat.save(extractMentions(labeled, scenario), paths.mentions, "doc_id",
+        sized(tableBytes(paths.docsLabeled)),
         "mentions", extra = Map("scenario" -> scenario))
     }
     val mentions = TableFormat.load(spark, paths.mentions)
 
     // (c) linked (broadcast join — shuffle-free); dict-fingerprint-gated
     stage(paths.linked, "dict_fp", dictFp) {
-      TableFormat.save(Linker.link(mentions, dict), paths.linked, "doc_id", buckets,
+      TableFormat.save(Linker.link(mentions, dict), paths.linked, "doc_id",
+        sized(tableBytes(paths.mentions)),
         "linked", extra = Map("dict_fp" -> dictFp))
     }
     val linked = TableFormat.load(spark, paths.linked)
@@ -478,7 +496,8 @@ object Pipeline {
     // (d) canonical entities (dict-only input, but kept on the linear dirty
     // chain — an unnecessary rebuild is cheap and the invariant stays simple)
     stage(paths.entities, "dict_fp", dictFp) {
-      TableFormat.save(Canonicalize.canonicalize(spark, dict), paths.entities, "entity_id", buckets,
+      TableFormat.save(Canonicalize.canonicalize(spark, dict), paths.entities, "entity_id",
+        sized(planBytes(dict)),
         "entities", extra = Map("dict_fp" -> dictFp))
     }
     val entities = TableFormat.load(spark, paths.entities)
@@ -488,7 +507,8 @@ object Pipeline {
       val withCanon = linked.join(
         broadcast(entities.select(col("entity_id"), col("canonical_id"))), Seq("entity_id"), "left")
         .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
-      TableFormat.save(Triples.fromLinkedMentions(withCanon), paths.triples, "doc_id", buckets, "triples")
+      TableFormat.save(Triples.fromLinkedMentions(withCanon), paths.triples, "doc_id",
+        sized(tableBytes(paths.linked, paths.entities)), "triples")
     }
     TableFormat.load(spark, paths.triples)
   }

@@ -3,7 +3,12 @@ package graft.io
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import java.nio.file.{AtomicMoveNotSupportedException, Files, Paths, Path}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import scala.jdk.CollectionConverters._
@@ -58,7 +63,7 @@ object TableFormat {
     // what plans.BucketPrune needs to conjoin the partition predicate for
     // key-equality scans automatically (Iceberg keeps the same facts in its
     // partition spec)
-    writeManifest(df.sparkSession, path, stage,
+    writeManifest(path, stage,
       extra + ("bucket_key" -> keyCol, "buckets" -> buckets.toString),
       writeMs = System.currentTimeMillis() - t0)
     // exact invalidation of the rule's layout cache: an mtime check alone
@@ -92,11 +97,10 @@ object TableFormat {
     out.write.mode(SaveMode.Overwrite).partitionBy(partCol, BucketCol).parquet(path)
     df.sparkSession.catalog.refreshByPath(path)
     Files.writeString(Paths.get(path, "_schema.json"), df.schema.json)
-    writeManifest(df.sparkSession, path, stage,
+    writeManifest(path, stage,
       extra + ("bucket_key" -> keyCol, "buckets" -> buckets.toString,
         "part_col" -> partCol),
-      writeMs = System.currentTimeMillis() - t0,
-      lineageCols = Seq(partCol, BucketCol))
+      writeMs = System.currentTimeMillis() - t0)
     graft.plans.BucketPrune.invalidate(path)
   }
 
@@ -107,7 +111,9 @@ object TableFormat {
     * [1, maxBuckets]. The same call yields 1 bucket per predicate for a
     * fixture-sized store — one well-sized file instead of 32 ten-row ones —
     * and hundreds for a corpus-scale one. Callers with a fixed production
-    * layout keep passing an explicit bucket count. */
+    * layout keep passing an explicit bucket count. The same clamped ceiling
+    * sizes by bytes too: `Pipeline.runAll` passes a stage's input bytes
+    * against `spark.sql.files.maxPartitionBytes`. */
   def adaptiveBuckets(rows: Long, targetRows: Long = 4000000L,
                       maxBuckets: Int = 1024): Int = {
     val r = math.max(rows, 0L)
@@ -116,56 +122,49 @@ object TableFormat {
     math.max(1L, math.min(maxBuckets.toLong, q)).toInt
   }
 
-  private def writeManifest(spark: SparkSession, path: String, stage: String,
-                            extra: Map[String, String], writeMs: Long,
-                            lineageCols: Seq[String] = Seq(BucketCol)): Unit = {
-    // Per-partition lineage counts from a scan that projects ONLY the bucket
-    // partition column: the parquet reader materializes row counts from file
-    // footers (zero data columns read), so this is metadata-priced even when
-    // the table is huge — not a re-read of the data.
-    val counts =
-      try spark.read.parquet(path)
-        .select(lineageCols.map(col): _*)
-        .groupBy(lineageCols.map(col): _*).count()
-        .collect()
-        .map { r =>
-          // single-level layouts keep the bare-bucket key; two-level layouts
-          // key by the leaf directory
-          val k =
-            if (lineageCols.size == 1) r.get(0).toString
-            else leafPath(lineageCols.head, Option(r.get(0)).map(_.toString).orNull, r.getInt(1))
-          (k, r.getLong(lineageCols.size))
-        }
-        .sortBy(_._1)
-      catch {
-        // an empty stage output writes no part files — zero partitions
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => Array.empty[(String, Long)]
-      }
-    // Stage metrics beside the lineage: total rows, files, bytes on disk
-    // (directory walk of what was just written — metadata-priced), and the
-    // write's wall duration. What an operator dashboard reads per stage.
-    val (nFiles, nBytes) = walkFilesBytes(Paths.get(path))
-    publishManifest(path, extra + ("stage" -> stage), counts, nFiles, nBytes, writeMs)
+  /** Publish the manifest of the table just written at `path` without a
+    * Spark job: one walk of the directory gives the file metrics and the
+    * lineage. A leaf's row count is the sum of the record counts in its part
+    * files' parquet footers, keyed by the leaf's directory relative to
+    * `path` — exactly [[leafPath]] for a two-level layout, the bare bucket
+    * value for a one-level one. An empty frame writes no leaf, so its
+    * lineage is empty. */
+  private def writeManifest(path: String, stage: String,
+                            extra: Map[String, String], writeMs: Long): Unit = {
+    val root = Paths.get(path)
+    val files = dataFiles(root)
+    val counts = files.groupMapReduce { f =>
+      val leaf = root.relativize(f.getParent).iterator().asScala.mkString("/")
+      if (leaf.contains('/')) leaf else leaf.stripPrefix(s"$BucketCol=")
+    }(footerRows)(_ + _).toSeq.filter(_._2 > 0L).sortBy(_._1)
+    publishManifest(path, extra + ("stage" -> stage), counts, files.size.toLong,
+      files.map(Files.size).sum, writeMs)
+  }
+
+  private def footerRows(file: Path): Long = {
+    val reader = ParquetFileReader.open(new LocalInputFile(file))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** Regular-file count + byte total under `root` (manifest/marker files
     * excluded). Metadata-priced: callers hand it either a whole fixture-scale
     * table or, on the update path, just the touched leaf directories. */
-  private[graft] def walkFilesBytes(root: Path): (Long, Long) =
-    if (!Files.exists(root)) (0L, 0L)
+  private[graft] def walkFilesBytes(root: Path): (Long, Long) = {
+    val files = dataFiles(root)
+    (files.size.toLong, files.map(Files.size).sum)
+  }
+
+  /** The files a parquet scan of `root` reads: every regular file whose
+    * name starts with neither `_` nor `.` (Spark's own hidden-file rule). */
+  private def dataFiles(root: Path): Seq[Path] =
+    if (!Files.exists(root)) Seq.empty
     else {
       val walk = Files.walk(root)
-      try {
-        var f = 0L; var b = 0L
-        walk.iterator().asScala.foreach { p =>
-          val name = p.getFileName.toString
-          if (Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".")) {
-            f += 1; b += Files.size(p)
-          }
-        }
-        (f, b)
-      } finally walk.close()
+      try walk.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".")
+      }.toVector
+      finally walk.close()
     }
 
   /** Relative directory of one leaf of a [[savePartitioned]] table, named
@@ -179,8 +178,8 @@ object TableFormat {
       ExternalCatalogUtils.getPartitionPathString(BucketCol, bucket.toString)
 
   /** Assemble + atomically publish a manifest from PRE-COMPUTED lineage
-    * counts and file metrics. [[save]]/[[savePartitioned]] feed it a full
-    * recount of what they just wrote; the update path
+    * counts and file metrics. [[save]]/[[savePartitioned]] feed it the
+    * footer counts of what they just wrote; the update path
     * ([[graft.kg.Update.applyDelta]]) feeds it a MERGE — untouched leaves
     * inherit their write-time counts, touched leaves are re-counted — so a
     * 10^12-row store's manifest refresh prices by the delta, not the table.
@@ -225,7 +224,7 @@ object TableFormat {
   final case class Manifest(fields: Map[String, String],
                             leafRows: Seq[(String, Long)],
                             files: Long, bytes: Long) {
-    def buckets: Int = fields.getOrElse("buckets", "32").toInt
+    def buckets: Int = fields("buckets").toInt
 
     def rows: Long = leafRows.map(_._2).sum
 
@@ -322,33 +321,41 @@ object TableFormat {
   private def str(n: JsonNode, k: String): String = req(n, k, _.isTextual).textValue
   private def num(n: JsonNode, k: String): Long = req(n, k, _.isIntegralNumber).longValue
 
-  /** Load a table previously written by save (drops the bucket column).
-    * An empty table (no part files) reconstructs from the schema snapshot. */
-  def load(spark: SparkSession, path: String): DataFrame = {
+  /** Load a table previously written by save (drops the bucket column). */
+  def load(spark: SparkSession, path: String): DataFrame = read(spark, path).drop(BucketCol)
+
+  /** The table at `path` with its `part_bucket` column. A [[save]]-written
+    * table reads with the schema snapshot plus `part_bucket: int`, so no
+    * inference job runs; an empty one needs no part file either. A
+    * [[savePartitioned]] table (its first level is a partition column) or
+    * one without a snapshot infers the schema from the files. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
     val schemaFile = Paths.get(path, "_schema.json")
-    try spark.read.parquet(path).drop(BucketCol)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" && Files.exists(schemaFile) =>
-        val schema = org.apache.spark.sql.types.DataType
-          .fromJson(Files.readString(schemaFile))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    lazy val written = StructType(DataType.fromJson(Files.readString(schemaFile))
+      .asInstanceOf[StructType].filterNot(_.name == BucketCol)).add(BucketCol, IntegerType)
+    if (Files.exists(schemaFile) && isComplete(path) && !readManifest(path).fields.contains("part_col"))
+      spark.read.schema(written).parquet(path)
+    else
+      try spark.read.parquet(path)
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" && Files.exists(schemaFile) =>
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], written)
+      }
   }
 
-  /** The bucket a key lands in — same hash as `save`, computable anywhere. */
-  def bucketOf(spark: SparkSession, key: String, buckets: Int = 32): Int =
-    spark.range(1).select(pmod(xxhash64(lit(key)), lit(buckets.toLong)).cast("int"))
-      .head().getInt(0)
+  /** The bucket a key lands in: `pmod(xxhash64(key), buckets)`, the
+    * expression [[save]] lays rows out by, evaluated on the driver. */
+  def bucketOf(key: String, buckets: Int): Int =
+    java.lang.Math.floorMod(XXH64.hashUTF8String(UTF8String.fromString(key), 42L), buckets.toLong).toInt
 
   /** Point lookup: rows whose `keyCol` equals `key`, reading ONLY that key's
     * bucket directory (partition pruning on the bucket column — at 10^12-doc
     * scale a doc fetch touches 1/buckets of the table, and the pruned
-    * partition shows up as PartitionFilters in the scan). */
-  def lookup(spark: SparkSession, path: String, keyCol: String, key: String,
-             buckets: Int = 32): DataFrame =
-    spark.read.parquet(path)
-      .filter(col(BucketCol) === bucketOf(spark, key, buckets) && col(keyCol) === key)
+    * partition shows up as PartitionFilters in the scan). The bucket count
+    * comes from the table's manifest. */
+  def lookup(spark: SparkSession, path: String, keyCol: String, key: String): DataFrame =
+    read(spark, path)
+      .filter(col(BucketCol) === bucketOf(key, readManifest(path).buckets) && col(keyCol) === key)
       .drop(BucketCol)
 }

@@ -93,7 +93,7 @@ class ModelIOSpec extends AnyFunSuite {
       val work = java.nio.file.Files.createTempDirectory(dir).toString
       val t = Pipeline.runAll(spark, docs,
         spark.createDataset(Fixtures.entityDictionary()).toDF(),
-        work, buckets = 2, models = models).collect().toSet
+        work, buckets = Some(2), models = models).collect().toSet
       def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
       rm(new java.io.File(work))
       t

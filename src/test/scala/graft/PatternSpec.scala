@@ -311,7 +311,7 @@ class PatternSpec extends AnyFunSuite {
     // subj-key bucket pruning still composes inside a predicate directory
     val oneKey = spark.read.parquet(store)
       .filter(col("pred") === "inDoc" &&
-        col(TableFormat.BucketCol) === TableFormat.bucketOf(spark, "ent:1", 4) &&
+        col(TableFormat.BucketCol) === TableFormat.bucketOf("ent:1", 4) &&
         col("subj") === "ent:1")
       .select(input_file_name()).as[String].collect().toSet
     assert(oneKey.forall(f => f.contains("pred=inDoc") && f.contains("part_bucket=")))

@@ -183,7 +183,7 @@ class PipelineSpec extends AnyFunSuite {
     val work = java.nio.file.Files.createTempDirectory("graft-stages").toString
     val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
     val docs = spark.createDataset(Fixtures.inputDocs(20))
-    val nTriples = Pipeline.runAll(spark, docs, dict, work, buckets = 4).count()
+    val nTriples = Pipeline.runAll(spark, docs, dict, work, buckets = Some(4)).count()
     assert(nTriples > 0)
     for (stage <- Seq("docs_labeled", "mentions", "linked", "entities", "triples"))
       assert(TableFormat.isComplete(s"$work/$stage"), s"manifest missing for $stage")
@@ -193,11 +193,34 @@ class PipelineSpec extends AnyFunSuite {
     rm(tDir)
     val docsLabeledMtime = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$work/docs_labeled/_manifest.json"))
-    val triples2 = Pipeline.runAll(spark, docs, dict, work, buckets = 4)
+    val triples2 = Pipeline.runAll(spark, docs, dict, work, buckets = Some(4))
     assert(triples2.count() === nTriples)
     assert(java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$work/docs_labeled/_manifest.json")) === docsLabeledMtime,
       "docs_labeled was recomputed on resume")
+    rm(new java.io.File(work))
+  }
+
+  test("runAll without buckets sizes each fixture stage to one bucket, with the same triples") {
+    val work = java.nio.file.Files.createTempDirectory("graft-sized").toString
+    val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
+    val docs = spark.createDataset(Fixtures.inputDocs(20))
+    val sized = Pipeline.runAll(spark, docs, dict, s"$work/sized")
+    val stages = Seq("docs_labeled", "mentions", "linked", "entities", "triples")
+    for (stage <- stages)
+      assert(TableFormat.readManifest(s"$work/sized/$stage").fields("buckets") === "1", stage)
+    assert(stages.map(st => TableFormat.readManifest(s"$work/sized/$st").files).sum === 5L)
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.select("subj", "pred", "obj", "doc_id").collect().map(_.mkString("\u0001"))
+        .groupMapReduce(identity)(_ => 1)(_ + _)
+    val fixed = Pipeline.runAll(spark, docs, dict, s"$work/fixed", buckets = Some(4))
+    val got = multiset(sized)
+    assert(got.nonEmpty)
+    assert(got === multiset(fixed))
+    // a one-bucket table still answers point lookups
+    assert(TableFormat.lookup(spark, s"$work/sized/triples", "doc_id", "doc-000003").count() ===
+      sized.filter(col("doc_id") === "doc-000003").count())
+    def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
     rm(new java.io.File(work))
   }
 
@@ -214,9 +237,9 @@ class PipelineSpec extends AnyFunSuite {
       Pipeline.fixtureRegistry("token-multi_oov"),
       Pipeline.fixtureRegistry("morph_oov"),
       Fixtures.lexicon)
-    val got = Pipeline.runAll(spark, docs, dict, s"$work/oov", buckets = 2,
+    val got = Pipeline.runAll(spark, docs, dict, s"$work/oov", buckets = Some(2),
       resume = false, models = oovModels)
-    val default = Pipeline.runAll(spark, docs, dict, s"$work/default", buckets = 2,
+    val default = Pipeline.runAll(spark, docs, dict, s"$work/default", buckets = Some(2),
       resume = false)
     assert(got.count() > 0)
     assert(got.exceptAll(default).count() === 0)
@@ -232,14 +255,14 @@ class PipelineSpec extends AnyFunSuite {
     def mf(stage: String, field: String): String =
       Option(SparkTestBase.manifestJson(s"$work/$stage").get(field)).filter(_.isTextual)
         .map(_.textValue).getOrElse(fail(s"no $field in $stage manifest"))
-    Pipeline.runAll(spark, docs, dict, work, buckets = 2)
+    Pipeline.runAll(spark, docs, dict, work, buckets = Some(2))
     val defaultFp = Pipeline.fixtureModels().fingerprint
     assert(mf("docs_labeled", "models_fp") === defaultFp)
     assert(mf("mentions", "scenario") === "morph")
     val t0 = mf("triples", "wall_ms")
 
     // same models + scenario → true resume, nothing rewritten
-    Pipeline.runAll(spark, docs, dict, work, buckets = 2)
+    Pipeline.runAll(spark, docs, dict, work, buckets = Some(2))
     assert(mf("triples", "wall_ms") === t0, "clean resume must not rewrite stages")
 
     // different weights (OOV registry variants) → docs_labeled re-annotates
@@ -250,7 +273,7 @@ class PipelineSpec extends AnyFunSuite {
       Pipeline.fixtureRegistry("morph_oov"),
       Fixtures.lexicon)
     assert(oov.fingerprint !== defaultFp)
-    Pipeline.runAll(spark, docs, dict, work, buckets = 2, models = oov)
+    Pipeline.runAll(spark, docs, dict, work, buckets = Some(2), models = oov)
     assert(mf("docs_labeled", "models_fp") === oov.fingerprint,
       "stale model outputs served on resume with different weights")
     assert(mf("triples", "wall_ms") !== t0, "downstream stages must follow the rebuild")
@@ -258,7 +281,7 @@ class PipelineSpec extends AnyFunSuite {
     // different scenario → mentions (and downstream) rebuild
     val t1 = mf("triples", "wall_ms")
     Thread.sleep(2)
-    Pipeline.runAll(spark, docs, dict, work, buckets = 2, models = oov,
+    Pipeline.runAll(spark, docs, dict, work, buckets = Some(2), models = oov,
       scenario = "token-single")
     assert(mf("mentions", "scenario") === "token-single")
     assert(mf("triples", "wall_ms") !== t1)
@@ -268,7 +291,7 @@ class PipelineSpec extends AnyFunSuite {
     val labeledT = mf("docs_labeled", "wall_ms")
     Thread.sleep(2)
     val dict2 = dict.limit(dict.count().toInt - 1) // drop one entity
-    Pipeline.runAll(spark, docs, dict2, work, buckets = 2, models = oov,
+    Pipeline.runAll(spark, docs, dict2, work, buckets = Some(2), models = oov,
       scenario = "token-single")
     assert(mf("triples", "wall_ms") !== t2,
       "stale triples served on resume with a different dictionary")
@@ -318,7 +341,7 @@ class PipelineSpec extends AnyFunSuite {
     val work = java.nio.file.Files.createTempDirectory("graft-lookup").toString
     val docs = spark.createDataset(Fixtures.inputDocs(40)).toDF()
     TableFormat.save(docs, work, "doc_id", buckets = 8)
-    val hit = TableFormat.lookup(spark, work, "doc_id", "doc-000007", buckets = 8)
+    val hit = TableFormat.lookup(spark, work, "doc_id", "doc-000007")
     assert(hit.count() === 1)
     // bucket-aligned write: exactly one parquet file per bucket directory
     def parquetFiles(f: java.io.File): Int =
@@ -330,11 +353,11 @@ class PipelineSpec extends AnyFunSuite {
     val plan = hit.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan.take(500))
     val pruned = spark.read.parquet(work)
-      .filter(col(TableFormat.BucketCol) === TableFormat.bucketOf(spark, "doc-000007", 8))
+      .filter(col(TableFormat.BucketCol) === TableFormat.bucketOf("doc-000007", 8))
     val bucketRows = pruned.count()
     assert(bucketRows < 40, s"bucket holds $bucketRows of 40 — pruning would be pointless")
     // wrong-bucket key is absent without scanning others
-    assert(TableFormat.lookup(spark, work, "doc_id", "doc-999999", buckets = 8).count() === 0)
+    assert(TableFormat.lookup(spark, work, "doc_id", "doc-999999").count() === 0)
     def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
     rm(new java.io.File(work))
   }
@@ -358,7 +381,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(q.count() === 1)
     assert(q.select("doc_id").as[String].head() === "doc-000007")
     // parity with the hand-pruned lookup path
-    assert(TableFormat.lookup(spark, work, "doc_id", "doc-000007", buckets = 8)
+    assert(TableFormat.lookup(spark, work, "doc_id", "doc-000007")
       .select("doc_id").as[String].collect().toSeq ===
       q.select("doc_id").as[String].collect().toSeq)
     // a manifest without bucket metadata (pre-rule table): rule no-ops, scan

@@ -177,7 +177,7 @@ class SnapshotSpec extends AnyFunSuite {
     val work = tmp("graft-incr")
     val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
     val docs = spark.createDataset(Fixtures.inputDocs(24))
-    val full = Pipeline.runAll(spark, docs, dict, s"$work/full", buckets = 2)
+    val full = Pipeline.runAll(spark, docs, dict, s"$work/full", buckets = Some(2))
 
     val firstHalf = docs.filter(d => d.doc_id < "doc-000012")
     val secondHalf = docs.filter(d => d.doc_id >= "doc-000012")
@@ -213,7 +213,7 @@ class SnapshotSpec extends AnyFunSuite {
     val oldDict = dict.filter(col("entity_id") % 5 =!= 1)
     assert(delta.count() > 0 && oldDict.count() > 0)
     val docs = spark.createDataset(Fixtures.inputDocs(24))
-    val full = Pipeline.runAll(spark, docs, dict, s"$work/full", buckets = 2)
+    val full = Pipeline.runAll(spark, docs, dict, s"$work/full", buckets = Some(2))
 
     val firstHalf = docs.filter(d => d.doc_id < "doc-000012")
     val secondHalf = docs.filter(d => d.doc_id >= "doc-000012")
@@ -249,7 +249,7 @@ class SnapshotSpec extends AnyFunSuite {
     val newDict = dict.filter(col("entity_id") % 5 =!= 0)
     assert(removed.count() > 0 && newDict.count() > 0)
     val docs = spark.createDataset(Fixtures.inputDocs(24))
-    val full = Pipeline.runAll(spark, docs, newDict, s"$work/full", buckets = 2)
+    val full = Pipeline.runAll(spark, docs, newDict, s"$work/full", buckets = Some(2))
 
     val firstHalf = docs.filter(d => d.doc_id < "doc-000012")
     val secondHalf = docs.filter(d => d.doc_id >= "doc-000012")

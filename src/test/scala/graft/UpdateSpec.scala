@@ -97,7 +97,7 @@ class UpdateSpec extends AnyFunSuite {
     assert(r.rowsBefore - r.rowsAfter === 2) // both provenance rows went
     // untouched leaves: identical files, identical mtimes (never rewritten)
     val stampsAfter = leafFileStamps(store)
-    val touchedPrefix = s"pred=label/part_bucket=${TableFormat.bucketOf(spark, "ent:1", Buckets)}"
+    val touchedPrefix = s"pred=label/part_bucket=${TableFormat.bucketOf("ent:1", Buckets)}"
     val untouched = stamps.filterNot(_._1.startsWith(touchedPrefix))
     assert(untouched.forall { case (f, t) => stampsAfter.get(f).contains(t) })
     assert(untouched.nonEmpty)
