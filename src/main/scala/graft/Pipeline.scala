@@ -504,11 +504,8 @@ object Pipeline {
 
     // (e) triples
     if (dirty || !(resume && TableFormat.isComplete(paths.triples))) {
-      val withCanon = linked.join(
-        broadcast(entities.select(col("entity_id"), col("canonical_id"))), Seq("entity_id"), "left")
-        .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
-      TableFormat.save(Triples.fromLinkedMentions(withCanon), paths.triples, "doc_id",
-        sized(tableBytes(paths.linked, paths.entities)), "triples")
+      TableFormat.save(Triples.fromLinkedMentions(Canonicalize.withCanonical(linked, entities)),
+        paths.triples, "doc_id", sized(tableBytes(paths.linked, paths.entities)), "triples")
     }
     TableFormat.load(spark, paths.triples)
   }
@@ -525,6 +522,15 @@ object Pipeline {
     s"${r.get(0)}_${r.getLong(1)}"
   }
 
+  /** How the entity dictionary changed since the previous
+    * [[runIncremental]] batch: `rows` are exactly the dictionary rows added
+    * or removed. */
+  sealed trait DictChange
+  object DictChange {
+    final case class Added(rows: DataFrame) extends DictChange
+    final case class Removed(rows: DataFrame) extends DictChange
+  }
+
   /** Incremental KG maintenance: process ONE new batch of documents and
     * append its outputs to every stage table, without touching (or even
     * reading) the rows of previous batches. At 10^12 docs this is the only
@@ -539,8 +545,8 @@ object Pipeline {
     * batches that PARTITION the doc set, the union of per-batch outputs is
     * row-identical to one full-batch run. The one global structure,
     * canonicalization, is dict-only: it is committed once (snapshot 1 of
-    * `entities`) and reused; a grown dict goes through
-    * [[graft.kg.Canonicalize.incrementalCanonicalize]] instead.
+    * `entities`) and reused; a dictionary that changed since the last batch
+    * is folded in first, through `dictChange` (see [[foldDictChange]]).
     *
     * Exactly-once per batch: `batchId` names each stage snapshot (its
     * `stage` field). A re-run with the same batchId skips every stage that
@@ -556,11 +562,10 @@ object Pipeline {
       dict: DataFrame,
       workDir: String,
       batchId: String,
+      buckets: Int,
       scenario: String = "morph",
-      buckets: Int = 32,
       models: Models = fixtureModels(),
-      dictDelta: Option[DataFrame] = None,
-      dictRemoved: Option[DataFrame] = None): DataFrame = {
+      dictChange: Option[DictChange] = None): DataFrame = {
     import graft.io.Snapshots
     import spark.implicits._
     val paths = StagePaths(workDir)
@@ -568,8 +573,6 @@ object Pipeline {
 
     def committed(table: String): Boolean =
       Snapshots.snapshots(table).exists(_.stage == batchId)
-    def committedStage(table: String, stage: String): Boolean =
-      Snapshots.snapshots(table).exists(_.stage == stage)
     // this batch's rows of a stage table: the incremental scan from the
     // batch snapshot's parent — resumable (re-readable after a crash) and
     // never touching other batches' data dirs
@@ -580,38 +583,8 @@ object Pipeline {
       else Snapshots.changes(spark, table, snap.parentId, Some(snap.id))
     }
 
-    // (0') dictionary GROWTH recovery (dictDelta): a grown dict changes the
-    // pipeline RETROACTIVELY in exactly two delta-prunable ways —
-    //  (1) canonicalization: new shared aliases merge components. Folded with
-    //      [[Canonicalize.incrementalComponents]] over the star edges of the
-    //      alias blocks the delta TOUCHES (delta-sized; old edges never
-    //      re-read — old components enter contracted through their labels).
-    //  (2) linking: a mention whose BLOCKING KEY gained candidates may now
-    //      link (or link elsewhere — top-1 over a bigger candidate set). Only
-    //      those mentions' docs re-link, against the full dict; mentions whose
-    //      block the delta never touches kept their candidate set, so their
-    //      argmax cannot change — they are never re-read past the block probe.
-    // Triples of affected docs (re-linked ∪ canonical-changed) are MoR-deleted
-    // and recomputed from the updated linked rows + new canonical map. The
-    // expensive stage — annotation — is never recomputed; the result is
-    // row-identical to a full rebuild with the grown dict (IncrementalSpec +
-    // the nemo_triples_dictgrow oracle).
-    dictDelta.foreach { delta =>
-      dictGrowthRecovery(spark, delta, dict, paths, batchId, buckets,
-        committedStage)
-    }
-    // (0'') dictionary SHRINK recovery (dictRemoved): deletion is the dual
-    // fold — components containing a removed entity may SPLIT, so their
-    // SURVIVORS' subgraph is re-solved from the new dict's alias blocks
-    // (delta-sized: blocks of survivors can only contain survivors — an edge
-    // to an unaffected entity would have put it in the same old component);
-    // mentions whose TOP-1 entity was removed re-link (removing a
-    // non-winning candidate cannot change an argmax, so only those docs are
-    // re-read); triples of (re-linked ∪ canonical-changed) docs recompute.
-    dictRemoved.foreach { removed =>
-      dictShrinkRecovery(spark, removed, dict, paths, batchId, buckets,
-        committedStage)
-    }
+    val dictFp = dictFingerprint(dict)
+    dictChange.foreach(foldDictChange(spark, _, dict, dictFp, paths, batchId, buckets))
 
     // (0) entities — dict-only, committed once under the dict's content
     // fingerprint. The static-dict contract is ENFORCED, not assumed: a later
@@ -619,7 +592,6 @@ object Pipeline {
     // stale canonical ids (and the already-emitted triples of prior batches
     // would be stale too — append-only cannot express that rewrite), so it
     // fails loudly with the recovery options instead.
-    val dictFp = dictFingerprint(dict)
     Snapshots.current(paths.entities) match {
       case None =>
         Snapshots.commit(Canonicalize.canonicalize(spark, dict),
@@ -627,9 +599,10 @@ object Pipeline {
       case Some(snap) if snap.stage != s"dict:$dictFp" =>
         throw new IllegalStateException(
           s"dictionary changed since ${paths.entities} was built (${snap.stage} != dict:$dictFp); " +
-          "a changed dict rewires canonicalization RETROACTIVELY — pass added rows as " +
-          "runIncremental(dictDelta = Some(...)) or removed rows as dictRemoved = Some(...) " +
-          "to fold the change incrementally, or rebuild via runAll into a fresh workDir")
+          "a changed dict rewires canonicalization RETROACTIVELY — pass the change as " +
+          "runIncremental(dictChange = Some(DictChange.Added(rows))) or " +
+          "Some(DictChange.Removed(rows)) to fold it incrementally, " +
+          "or rebuild via runAll into a fresh workDir")
       case _ => ()
     }
     val entities = Snapshots.load(spark, paths.entities)
@@ -653,218 +626,134 @@ object Pipeline {
     val linkedDelta = deltaOf(paths.linked)
 
     // (d) delta triples
-    if (!committed(paths.triples)) {
-      val withCanon = linkedDelta.join(
-        broadcast(entities.select(col("entity_id"), col("canonical_id"))), Seq("entity_id"), "left")
-        .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
-      Snapshots.commit(Triples.fromLinkedMentions(withCanon),
+    if (!committed(paths.triples))
+      Snapshots.commit(Triples.fromLinkedMentions(Canonicalize.withCanonical(linkedDelta, entities)),
         paths.triples, "doc_id", buckets, stage = batchId)
-    }
     Snapshots.load(spark, paths.triples)
   }
 
-  /** The dict-growth fold (see runIncremental step 0'). Crash-resumable: each
-    * write is guarded by its stage name; the entities overwrite is LAST, so a
-    * resume that finds entities already at the full-dict fingerprint knows the
-    * whole recovery committed. */
-  private def dictGrowthRecovery(
-      spark: SparkSession, delta: DataFrame, dict: DataFrame,
-      paths: StagePaths, batchId: String, buckets: Int,
-      committedStage: (String, String) => Boolean): Unit = {
+  /** Fold a dictionary change into the committed stage tables, so that the
+    * KG equals a full rebuild with the changed dict `dict` (fingerprint
+    * `dictFp`); the expensive stage, annotation, is never recomputed
+    * (IncrementalSpec + the `nemo_triples_dictgrow`/`_dictshrink` oracles).
+    * A change rewires the pipeline RETROACTIVELY in two delta-prunable ways:
+    *  (1) canonicalization. Added rows can MERGE components: the star edges
+    *      of the alias blocks they touch fold into the old assignment
+    *      ([[Canonicalize.incrementalComponents]]; old edges are never
+    *      re-read). Removed rows can SPLIT components: the survivors of
+    *      every component that held a removed entity are re-solved from the
+    *      new dict's alias blocks (blocks of survivors hold only survivors —
+    *      an edge to an unaffected entity would have put it in the same old
+    *      component); everyone else keeps their canonical id.
+    *  (2) linking. Added rows re-link the docs with a mention whose blocking
+    *      key gained candidates (top-1 over a bigger candidate set); any
+    *      other mention kept its candidate set, so its argmax cannot change.
+    *      Removed rows re-link only the docs whose top-1 entity was removed
+    *      (a losing candidate's removal cannot change an argmax).
+    * Triples of the affected docs (re-linked ∪ canonical-changed) are
+    * MoR-deleted and recomputed from the updated links and the new map.
+    *
+    * Crash-resumable: each write is guarded by its stage name, and the
+    * entities overwrite is LAST, so a resume that finds entities already at
+    * `dictFp` knows the whole fold committed. A removal's re-link doc set is
+    * committed to `shrink_docs` before any mutation: it derives from the
+    * linked table, which the re-link itself rewrites (an addition's set
+    * re-derives from the immutable mentions table). */
+  private def foldDictChange(
+      spark: SparkSession, change: DictChange, dict: DataFrame, dictFp: String,
+      paths: StagePaths, batchId: String, buckets: Int): Unit = {
     import graft.io.Snapshots
-    val fpFull = dictFingerprint(dict)
+    import DictChange.{Added, Removed}
     val curEnt = Snapshots.current(paths.entities)
-    if (curEnt.isEmpty || curEnt.exists(_.stage == s"dict:$fpFull")) return // fresh table / already folded
-    val oldDict = dict.join(delta.select(col("entity_id")), Seq("entity_id"), "left_anti")
+    if (curEnt.isEmpty || curEnt.exists(_.stage == s"dict:$dictFp")) return // fresh table / already folded
+    val (oldDict, prefix) = change match {
+      case Added(rows) =>
+        (dict.join(rows.select(col("entity_id")), Seq("entity_id"), "left_anti"), s"$batchId:dict")
+      case Removed(rows) =>
+        (dict.unionByName(rows.select(dict.columns.map(col): _*)), s"$batchId:dict-shrink")
+    }
     val fpOld = dictFingerprint(oldDict)
     require(curEnt.get.stage == s"dict:$fpOld",
-      s"entities stage ${curEnt.get.stage} matches neither the grown dict (dict:$fpFull) nor " +
-      s"dict-minus-delta (dict:$fpOld): dictDelta must be exactly the rows added since the last batch")
+      s"entities stage ${curEnt.get.stage} matches neither the changed dict (dict:$dictFp) nor the " +
+      s"dict before the change (dict:$fpOld): dictChange must hold exactly the rows changed since the last batch")
+    def committedStage(table: String, stage: String): Boolean =
+      Snapshots.snapshots(table).exists(_.stage == stage)
+    // MoR-delete `docs` from `table`, then commit their rebuilt rows; a
+    // resume skips each half that already committed
+    def replaceDocs(table: String, stage: String, docs: => DataFrame)(rebuild: DataFrame => DataFrame): Unit =
+      if (!committedStage(table, stage)) {
+        val d = docs
+        if (!d.isEmpty) {
+          if (!committedStage(table, s"$stage-del"))
+            Snapshots.deleteWhere(d, table, stage = s"$stage-del", buckets = buckets)
+          Snapshots.commit(rebuild(d), table, "doc_id", buckets, stage = stage)
+        }
+      }
 
-    // (1) incremental canonicalization: star edges of the alias blocks the
-    // delta touches (hub = block-min entity_id over the FULL dict), folded
-    // into the previous assignment. Old edges are never re-read.
+    // (1) the new component assignment (node, component) and (2) the docs
+    // whose top-1 link may have changed
     val oldEntities = Snapshots.load(spark, paths.entities).localCheckpoint()
-    val blocksAll = Linker.aliasBlocks(dict)
-      .select(col("entity_id"), col("alias_norm")).distinct()
-    val deltaAliases = Linker.aliasBlocks(delta).select(col("alias_norm")).distinct()
-    val touched = blocksAll.join(deltaAliases, Seq("alias_norm"), "left_semi")
-    val hub = org.apache.spark.sql.expressions.Window.partitionBy("alias_norm")
-    val newEdges = touched
-      .withColumn("dst", min("entity_id").over(hub))
-      .filter(col("entity_id") =!= col("dst"))
-      .select(col("entity_id").as("src"), col("dst")).distinct()
-    val prev = oldEntities.select(col("entity_id").as("node"), col("canonical_id").as("component"))
-    val comp2 = Canonicalize.incrementalComponents(spark, prev, newEdges)
-    val newEntities = dict
-      .join(comp2.withColumnRenamed("node", "entity_id"), Seq("entity_id"), "left")
-      .withColumn("canonical_id", coalesce(col("component"), col("entity_id")))
-      .drop("component")
-      .localCheckpoint() // reused by (2)+(3) and the final overwrite
-
-    // (2) retro-linking: mentions whose blocking key gained candidates.
-    // One mentions-table scan (block probe only — never re-annotates);
-    // affected docs get their linked rows MoR-deleted and re-linked against
-    // the FULL dict (= the full-rebuild argmax for exactly those mentions).
-    val relinkStage = s"$batchId:dict-relink"
     val mentionsAll = Snapshots.load(spark, paths.mentions)
-    val affectedLinkDocs = mentionsAll
-      .withColumn("block", Linker.blockKeyCol(col("surface")))
-      .join(Linker.aliasBlocks(delta).select(col("block")).distinct(), Seq("block"), "left_semi")
-      .select(col("doc_id")).distinct().localCheckpoint()
-    if (!committedStage(paths.linked, relinkStage) && !affectedLinkDocs.isEmpty) {
-      Snapshots.deleteWhere(affectedLinkDocs, paths.linked,
-        stage = s"$relinkStage-del", buckets = buckets)
-      val affMentions = mentionsAll.join(affectedLinkDocs, Seq("doc_id"), "left_semi")
-      Snapshots.commit(Linker.link(affMentions, dict), paths.linked, "doc_id",
-        buckets, stage = relinkStage)
+    val (comp, linkDocs) = change match {
+      case Added(rows) =>
+        val added = Linker.aliasBlocks(rows)
+        val touched = Linker.aliasBlocks(dict)
+          .join(added.select(col("alias_norm")).distinct(), Seq("alias_norm"), "left_semi")
+        val prev = oldEntities.select(col("entity_id").as("node"), col("canonical_id").as("component"))
+        val docs = mentionsAll
+          .withColumn("block", Linker.blockKeyCol(col("surface")))
+          .join(added.select(col("block")).distinct(), Seq("block"), "left_semi")
+          .select(col("doc_id")).distinct()
+        (Canonicalize.incrementalComponents(spark, prev, Canonicalize.starEdges(touched)), docs)
+      case Removed(rows) =>
+        val removedIds = rows.select(col("entity_id")).distinct().localCheckpoint()
+        val affComps = oldEntities.join(removedIds, Seq("entity_id"), "left_semi")
+          .select(col("canonical_id")).distinct()
+        val survivors = oldEntities
+          .join(affComps, Seq("canonical_id"), "left_semi")
+          .join(removedIds, Seq("entity_id"), "left_anti")
+          .select(col("entity_id")).localCheckpoint()
+        val kept = oldEntities.join(survivors, Seq("entity_id"), "left_anti")
+          .select(col("entity_id").as("node"), col("canonical_id").as("component"))
+        val split = Canonicalize.connectedComponents(spark,
+          Canonicalize.starEdges(Linker.aliasBlocks(dict).join(survivors, Seq("entity_id"), "left_semi")))
+        val docsTable = s"${paths.root}/shrink_docs"
+        if (!committedStage(docsTable, prefix))
+          Snapshots.commit(Snapshots.load(spark, paths.linked)
+              .join(removedIds, Seq("entity_id"), "left_semi").select(col("doc_id")).distinct(),
+            docsTable, "doc_id", buckets, stage = prefix, op = "overwrite")
+        (kept.unionByName(split), Snapshots.load(spark, docsTable))
+    }
+    val newEntities = Canonicalize.withCanonical(dict,
+        comp.select(col("node").as("entity_id"), col("component").as("canonical_id")))
+      .localCheckpoint() // reused by the refit and the final overwrite
+    val affectedLinkDocs = linkDocs.localCheckpoint()
+
+    // (3) re-link the affected docs against the FULL changed dict
+    replaceDocs(paths.linked, s"$prefix-relink", affectedLinkDocs) { docs =>
+      Linker.link(mentionsAll.join(docs, Seq("doc_id"), "left_semi"), dict)
     }
 
-    // (3) triples of affected docs: re-linked docs ∪ docs whose linked
-    // entities changed canonical id (computed on the POST-relink linked
-    // table — a doc that stopped referencing a changed entity is already in
-    // the relink set). Delete + recompute from updated links + new map.
-    val refitStage = s"$batchId:dict-refit"
-    if (!committedStage(paths.triples, refitStage)) {
+    // (4) triples of re-linked ∪ canonical-changed docs, the latter found on
+    // the POST-relink linked table (a doc that stopped referencing a changed
+    // entity is already in the re-link set)
+    val linkedAll = Snapshots.load(spark, paths.linked)
+    replaceDocs(paths.triples, s"$prefix-refit", {
       val changedEnts = oldEntities
         .select(col("entity_id"), col("canonical_id").as("old_cid"))
         .join(newEntities.select(col("entity_id"), col("canonical_id")), Seq("entity_id"))
         .filter(col("old_cid") =!= col("canonical_id"))
         .select(col("entity_id"))
-      val linkedAll = Snapshots.load(spark, paths.linked)
-      val affectedCanonDocs = linkedAll
-        .join(changedEnts, Seq("entity_id"), "left_semi")
-        .select(col("doc_id")).distinct()
-      val affectedDocs = affectedLinkDocs.union(affectedCanonDocs)
+      affectedLinkDocs
+        .union(linkedAll.join(changedEnts, Seq("entity_id"), "left_semi").select(col("doc_id")))
         .distinct().localCheckpoint()
-      if (!affectedDocs.isEmpty) {
-        Snapshots.deleteWhere(affectedDocs, paths.triples,
-          stage = s"$refitStage-del", buckets = buckets)
-        val linkedAff = linkedAll.join(affectedDocs, Seq("doc_id"), "left_semi")
-        val withCanon = linkedAff
-          .join(broadcast(newEntities.select(col("entity_id"), col("canonical_id"))),
-            Seq("entity_id"), "left")
-          .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
-        Snapshots.commit(Triples.fromLinkedMentions(withCanon), paths.triples,
-          "doc_id", buckets, stage = refitStage)
-      }
+    }) { docs =>
+      Triples.fromLinkedMentions(Canonicalize.withCanonical(
+        linkedAll.join(docs, Seq("doc_id"), "left_semi"), newEntities))
     }
 
-    // (4) entities overwrite LAST — the commit that marks recovery complete
+    // (5) entities overwrite LAST — the commit that marks the fold complete
     Snapshots.commit(newEntities, paths.entities, "entity_id", buckets,
-      stage = s"dict:$fpFull", op = "overwrite")
-    ()
-  }
-
-  /** The dict-SHRINK fold (see runIncremental step 0''). Crash-resumable with
-    * the same commit discipline as growth (entities overwrite LAST), plus one
-    * extra persisted artifact: the affected-doc set is committed BEFORE any
-    * mutation — unlike growth (where affected docs re-derive from the
-    * immutable mentions table), shrink derives them from the linked table,
-    * which the relink step itself rewrites, so a crash between relink and
-    * refit would otherwise lose the set (including docs that linked ONLY
-    * removed entities and now produce zero linked rows). */
-  private def dictShrinkRecovery(
-      spark: SparkSession, removed: DataFrame, dict: DataFrame,
-      paths: StagePaths, batchId: String, buckets: Int,
-      committedStage: (String, String) => Boolean): Unit = {
-    import graft.io.Snapshots
-    val fpFull = dictFingerprint(dict)
-    val curEnt = Snapshots.current(paths.entities)
-    if (curEnt.isEmpty || curEnt.exists(_.stage == s"dict:$fpFull")) return // fresh / already folded
-    val oldDict = dict.unionByName(removed.select(dict.columns.map(col): _*))
-    val fpOld = dictFingerprint(oldDict)
-    require(curEnt.get.stage == s"dict:$fpOld",
-      s"entities stage ${curEnt.get.stage} matches neither the shrunk dict (dict:$fpFull) nor " +
-      s"dict-plus-removed (dict:$fpOld): dictRemoved must be exactly the rows deleted since the last batch")
-
-    val oldEntities = Snapshots.load(spark, paths.entities).localCheckpoint()
-    val removedIds = removed.select(col("entity_id")).distinct().localCheckpoint()
-
-    // (1) split canonicalization: survivors of components that contained a
-    // removed entity get their subgraph re-solved from the NEW dict's alias
-    // blocks; everyone else keeps their old canonical id verbatim
-    val affComps = oldEntities.join(removedIds, Seq("entity_id"), "left_semi")
-      .select(col("canonical_id")).distinct()
-    val survivors = oldEntities
-      .join(affComps, Seq("canonical_id"), "left_semi")
-      .join(removedIds, Seq("entity_id"), "left_anti")
-      .select(col("entity_id")).localCheckpoint()
-    val blocks = Linker.aliasBlocks(dict)
-      .select(col("entity_id"), col("alias_norm")).distinct()
-      .join(survivors, Seq("entity_id"), "left_semi")
-    val hub = org.apache.spark.sql.expressions.Window.partitionBy("alias_norm")
-    val subEdges = blocks
-      .withColumn("dst", min("entity_id").over(hub))
-      .filter(col("entity_id") =!= col("dst"))
-      .select(col("entity_id").as("src"), col("dst")).distinct()
-    val comp = Canonicalize.connectedComponents(spark, subEdges)
-    val newEntities = dict
-      .join(oldEntities.select(col("entity_id"), col("canonical_id").as("old_cid")),
-        Seq("entity_id"), "left")
-      .join(survivors.withColumn("is_aff", lit(true)), Seq("entity_id"), "left")
-      .join(comp.withColumnRenamed("node", "entity_id"), Seq("entity_id"), "left")
-      .withColumn("canonical_id",
-        when(col("is_aff").isNotNull, coalesce(col("component"), col("entity_id")))
-          .otherwise(coalesce(col("old_cid"), col("entity_id"))))
-      .drop("old_cid", "is_aff", "component")
-      .localCheckpoint()
-
-    // (2) persist the affected-LINK doc set FIRST (resume-stable: the linked
-    // table is about to be rewritten under these very docs)
-    val shrinkStage = s"$batchId:dict-shrink"
-    val affDocsPath = s"${paths.root}/shrink_docs"
-    if (!committedStage(affDocsPath, shrinkStage)) {
-      val affected = Snapshots.load(spark, paths.linked)
-        .join(removedIds, Seq("entity_id"), "left_semi")
-        .select(col("doc_id")).distinct()
-      Snapshots.commit(affected, affDocsPath, "doc_id", buckets,
-        stage = shrinkStage, op = "overwrite")
-    }
-    val affectedLinkDocs = Snapshots.load(spark, affDocsPath).localCheckpoint()
-
-    // (3) retro-linking: only docs whose argmax pointed at a removed entity —
-    // an argmax cannot change when a losing candidate disappears
-    val relinkStage = s"$shrinkStage-relink"
-    if (!committedStage(paths.linked, relinkStage) && !affectedLinkDocs.isEmpty) {
-      Snapshots.deleteWhere(affectedLinkDocs, paths.linked,
-        stage = s"$relinkStage-del", buckets = buckets)
-      val affMentions = Snapshots.load(spark, paths.mentions)
-        .join(affectedLinkDocs, Seq("doc_id"), "left_semi")
-      Snapshots.commit(Linker.link(affMentions, dict), paths.linked, "doc_id",
-        buckets, stage = relinkStage)
-    }
-
-    // (4) triples of affected docs: re-linked ∪ canonical-changed
-    val refitStage = s"$shrinkStage-refit"
-    if (!committedStage(paths.triples, refitStage)) {
-      val changedEnts = oldEntities
-        .select(col("entity_id"), col("canonical_id").as("old_cid"))
-        .join(newEntities.select(col("entity_id"), col("canonical_id")), Seq("entity_id"))
-        .filter(col("old_cid") =!= col("canonical_id"))
-        .select(col("entity_id"))
-      val linkedAll = Snapshots.load(spark, paths.linked)
-      val affectedCanonDocs = linkedAll
-        .join(changedEnts, Seq("entity_id"), "left_semi")
-        .select(col("doc_id")).distinct()
-      val affectedDocs = affectedLinkDocs.union(affectedCanonDocs)
-        .distinct().localCheckpoint()
-      if (!affectedDocs.isEmpty) {
-        Snapshots.deleteWhere(affectedDocs, paths.triples,
-          stage = s"$refitStage-del", buckets = buckets)
-        val linkedAff = linkedAll.join(affectedDocs, Seq("doc_id"), "left_semi")
-        val withCanon = linkedAff
-          .join(broadcast(newEntities.select(col("entity_id"), col("canonical_id"))),
-            Seq("entity_id"), "left")
-          .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
-        Snapshots.commit(Triples.fromLinkedMentions(withCanon), paths.triples,
-          "doc_id", buckets, stage = refitStage)
-      }
-    }
-
-    // (5) entities overwrite LAST — marks recovery complete
-    Snapshots.commit(newEntities, paths.entities, "entity_id", buckets,
-      stage = s"dict:$fpFull", op = "overwrite")
-    ()
+      stage = s"dict:$dictFp", op = "overwrite")
   }
 }

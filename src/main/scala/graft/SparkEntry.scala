@@ -124,10 +124,7 @@ object SparkEntry {
         import s.implicits._
         val mentions = annotatedMentions(s, 300, "morph")
         val dict = s.createDataset(Fixtures.entityDictionary()).toDF()
-        val linked = Linker.link(mentions, dict)
-        val withCanon = linked
-          .join(broadcast(fixtureEntities(s)), Seq("entity_id"), "left")
-          .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
+        val withCanon = Canonicalize.withCanonical(Linker.link(mentions, dict), fixtureEntities(s))
         val t = Triples.fromLinkedMentions(withCanon).localCheckpoint()
         triplesCache.put(s, t); evictOnStop(triplesCache, s)
         t
@@ -454,89 +451,45 @@ object SparkEntry {
       }
     }
 
-  /** Incremental-pipeline triples artifact: the fixture corpus ingested as
+  /** Incremental-pipeline triples artifacts: the fixture corpus ingested as
     * two delta batches through Pipeline.runIncremental (snapshot-append
-    * stage tables) — the resulting FULL triples table must hash-equal the
-    * same gold-derived oracle as the one-shot nemo_triples run. */
+    * stage tables), b1 = docs before doc-000150 and b2 = the rest. `dicts`
+    * maps the fixture dictionary to (b1's dict, b2's dict, b2's change):
+    *  - `incr`: the full dict throughout; the FULL triples table must
+    *    hash-equal the same gold-derived oracle as the one-shot nemo_triples;
+    *  - `dictgrow`: b1 runs without every entity_id ≡ 1 mod 5 (which
+    *    includes every second member of the shared `group-N` alias pairs,
+    *    so real component merges are at stake) and b2 adds them back — the
+    *    fold must land on the same one-shot oracle as nemo_triples;
+    *  - `dictshrink`: b2 arrives after every entity_id ≡ 0 mod 5 was
+    *    deleted (the 40k-member of every `group-N` pair, so real component
+    *    SPLITS are at stake, and plenty of previously-linked surfaces, so
+    *    retro-linking must fire); the oracle is the same triples SQL with
+    *    the dict CTE filtered to the surviving rows.
+    * Built once per session and name. */
   private val incrCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, DataFrame]())
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]())
 
-  private def incrTriples(s: SparkSession): DataFrame =
+  private def incrTriples(s: SparkSession, name: String)(
+      dicts: DataFrame => (DataFrame, DataFrame, Option[Pipeline.DictChange])): DataFrame =
     incrCache.synchronized {
-      val cached = incrCache.get(s)
-      if (cached != null) cached
-      else {
+      val perSession = {
+        val m = incrCache.get(s)
+        if (m != null) m else {
+          val m2 = scala.collection.mutable.Map.empty[String, DataFrame]
+          incrCache.put(s, m2); evictOnStop(incrCache, s); m2
+        }
+      }
+      perSession.getOrElseUpdate(name, {
         import s.implicits._
-        val work = java.nio.file.Files.createTempDirectory("graft-incr-kg").toString
-        val dict = s.createDataset(Fixtures.entityDictionary()).toDF()
+        val work = java.nio.file.Files.createTempDirectory(s"graft-$name-kg").toString
+        val (dict1, dict2, change) = dicts(s.createDataset(Fixtures.entityDictionary()).toDF())
         val docs = fixtureDocsDf(s, 300)
         Pipeline.runIncremental(s, docs.filter(col("doc_id") < "doc-000150"),
-          dict, work, batchId = "b1", buckets = 8)
-        val full = Pipeline.runIncremental(s, docs.filter(col("doc_id") >= "doc-000150"),
-          dict, work, batchId = "b2", buckets = 8)
-        incrCache.put(s, full); evictOnStop(incrCache, s)
-        full
-      }
-    }
-
-  /** Dict-GROWTH incremental twin: batch 1 runs with the dictionary MINUS a
-    * delta (every entity_id ≡ 1 mod 5 — which includes every second member of
-    * the shared `group-N` alias pairs, so real component merges are at
-    * stake); batch 2 arrives with the grown dict + dictDelta, triggering the
-    * recovery fold (incremental CC + retro-link + affected-doc triple
-    * recompute). The FULL table must hash-equal the same one-shot oracle as
-    * nemo_triples — i.e. the fold is row-identical to a full rebuild. */
-  private val dictGrowCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, DataFrame]())
-
-  private def dictGrowTriples(s: SparkSession): DataFrame =
-    dictGrowCache.synchronized {
-      val cached = dictGrowCache.get(s)
-      if (cached != null) cached
-      else {
-        import s.implicits._
-        val work = java.nio.file.Files.createTempDirectory("graft-dictgrow-kg").toString
-        val dict = s.createDataset(Fixtures.entityDictionary()).toDF()
-        val delta = dict.filter(col("entity_id") % 5 === 1)
-        val oldDict = dict.filter(col("entity_id") % 5 =!= 1)
-        val docs = fixtureDocsDf(s, 300)
-        Pipeline.runIncremental(s, docs.filter(col("doc_id") < "doc-000150"),
-          oldDict, work, batchId = "b1", buckets = 8)
-        val full = Pipeline.runIncremental(s, docs.filter(col("doc_id") >= "doc-000150"),
-          dict, work, batchId = "b2", buckets = 8, dictDelta = Some(delta))
-        dictGrowCache.put(s, full); evictOnStop(dictGrowCache, s)
-        full
-      }
-    }
-
-  /** Dict-SHRINK incremental twin: batch 1 runs with the FULL dictionary;
-    * batch 2 arrives after every entity_id ≡ 0 mod 5 was deleted (which
-    * removes the 40k-member of every shared `group-N` alias pair, so real
-    * component SPLITS are at stake, and plenty of previously-linked surfaces,
-    * so retro-linking must fire). The full table must hash-equal a one-shot
-    * run with the SHRUNK dict (oracle: same triples SQL with the dict CTE
-    * filtered to the surviving rows). */
-  private val dictShrinkCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, DataFrame]())
-
-  private def dictShrinkTriples(s: SparkSession): DataFrame =
-    dictShrinkCache.synchronized {
-      val cached = dictShrinkCache.get(s)
-      if (cached != null) cached
-      else {
-        import s.implicits._
-        val work = java.nio.file.Files.createTempDirectory("graft-dictshrink-kg").toString
-        val dict = s.createDataset(Fixtures.entityDictionary()).toDF()
-        val removed = dict.filter(col("entity_id") % 5 === 0)
-        val newDict = dict.filter(col("entity_id") % 5 =!= 0)
-        val docs = fixtureDocsDf(s, 300)
-        Pipeline.runIncremental(s, docs.filter(col("doc_id") < "doc-000150"),
-          dict, work, batchId = "b1", buckets = 8)
-        val full = Pipeline.runIncremental(s, docs.filter(col("doc_id") >= "doc-000150"),
-          newDict, work, batchId = "b2", buckets = 8, dictRemoved = Some(removed))
-        dictShrinkCache.put(s, full); evictOnStop(dictShrinkCache, s)
-        full
-      }
+          dict1, work, batchId = "b1", buckets = 8)
+        Pipeline.runIncremental(s, docs.filter(col("doc_id") >= "doc-000150"),
+          dict2, work, batchId = "b2", buckets = 8, dictChange = change)
+      })
     }
 
   private def coocEdges(s: SparkSession): DataFrame =
@@ -547,10 +500,7 @@ object SparkEntry {
         import s.implicits._
         val mentions = annotatedMentions(s, 300, "morph")
         val dict = s.createDataset(Fixtures.entityDictionary()).toDF()
-        val linked = Linker.link(mentions, dict)
-        val withCanon = linked
-          .join(broadcast(fixtureEntities(s)), Seq("entity_id"), "left")
-          .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
+        val withCanon = Canonicalize.withCanonical(Linker.link(mentions, dict), fixtureEntities(s))
         val e = kg.Cooccur.edges(withCanon).localCheckpoint()
         coocCache.put(s, e); evictOnStop(coocCache, s)
         e
@@ -1439,11 +1389,8 @@ object SparkEntry {
       import s.implicits._
       val mentions = annotatedMentions(s, 300, "morph")
       val dict = s.createDataset(Fixtures.entityDictionary()).toDF()
-      val linked = Linker.link(mentions, dict)
-      val withCanon = linked
-        .join(broadcast(fixtureEntities(s)), Seq("entity_id"), "left")
-        .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
-      Triples.fromLinkedMentions(withCanon)
+      Triples.fromLinkedMentions(
+        Canonicalize.withCanonical(Linker.link(mentions, dict), fixtureEntities(s)))
     }),
     "nemo_kg_2hop" -> ((s, _) => {
       // KG READ path: SPARQL-shaped basic-graph-pattern match over the
@@ -1784,20 +1731,26 @@ object SparkEntry {
       // corpus ingested as two delta batches via Pipeline.runIncremental
       // (snapshot-append stage tables, exactly-once batch commits); the full
       // triples table must hash-equal the one-shot run's gold-derived oracle
-      incrTriples(s)),
+      incrTriples(s, "incr")(dict => (dict, dict, None))),
     "nemo_triples_dictgrow" -> ((s, _) =>
-      // dict-GROWTH twin: batch 2 arrives with a grown dictionary +
-      // dictDelta; the recovery fold (incremental CC over touched alias
+      // dict-GROWTH twin: batch 2 arrives with a grown dictionary and
+      // DictChange.Added; the recovery fold (incremental CC over touched alias
       // blocks, block-pruned retro-link, affected-doc triple recompute —
       // annotation never recomputed) must land on the SAME one-shot
       // full-dict oracle as nemo_triples
-      dictGrowTriples(s)),
+      incrTriples(s, "dictgrow") { dict =>
+        val added = dict.filter(col("entity_id") % 5 === 1)
+        (dict.filter(col("entity_id") % 5 =!= 1), dict, Some(Pipeline.DictChange.Added(added)))
+      }),
     "nemo_triples_dictshrink" -> ((s, _) =>
       // dict-SHRINK twin: batch 2 arrives after a fifth of the dictionary
       // was deleted; the dual fold (survivor-subgraph CC re-solve for SPLIT
       // components, removed-winner retro-link, affected-doc triple
       // recompute) must land on the one-shot shrunk-dict oracle
-      dictShrinkTriples(s)),
+      incrTriples(s, "dictshrink") { dict =>
+        val removed = dict.filter(col("entity_id") % 5 === 0)
+        (dict, dict.filter(col("entity_id") % 5 =!= 0), Some(Pipeline.DictChange.Removed(removed)))
+      }),
     "nemo_cooc" -> ((s, _) => {
       // KG densification after linking+canonicalization: canonical entities
       // co-mentioned in a sentence, kept when exact-integer lift ≥ 1.0

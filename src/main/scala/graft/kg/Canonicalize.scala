@@ -203,20 +203,36 @@ object Canonicalize {
     * components of the star graph equal those of the all-pairs graph by
     * construction (every member reaches every other through the hub). */
   def canonicalize(spark: SparkSession, dict: DataFrame): DataFrame = {
-    val blocks = Linker.aliasBlocks(dict)
-      .select(col("entity_id"), col("alias_norm").as("block"))
-      .distinct()
-    val hub = org.apache.spark.sql.expressions.Window.partitionBy("block")
-    val edges = blocks
-      .withColumn("dst", min("entity_id").over(hub))
-      .filter(col("entity_id") =!= col("dst"))
-      .select(col("entity_id").as("src"), col("dst"))
-      .distinct()
-    val comp = connectedComponents(spark, edges)
+    val comp = connectedComponents(spark, starEdges(Linker.aliasBlocks(dict)))
     dict.join(comp.withColumnRenamed("node", "entity_id"), Seq("entity_id"), "left")
       .withColumn("canonical_id", coalesce(col("component"), col("entity_id")))
       .drop("component")
   }
+
+  /** The star edges of alias blocks (SparkER's blocking graph, PAPERS.md):
+    * `blocks` holds (entity_id, alias_norm) rows, e.g. [[Linker.aliasBlocks]]
+    * or a subset of it; every entity of a block gets one edge (src, dst) to
+    * the block's min entity_id. [[canonicalize]] and the dictionary-change
+    * folds of [[graft.Pipeline.runIncremental]] build their edges here. */
+  def starEdges(blocks: DataFrame): DataFrame = {
+    val hub = org.apache.spark.sql.expressions.Window.partitionBy("block")
+    blocks
+      .select(col("entity_id"), col("alias_norm").as("block"))
+      .distinct()
+      .withColumn("dst", min("entity_id").over(hub))
+      .filter(col("entity_id") =!= col("dst"))
+      .select(col("entity_id").as("src"), col("dst"))
+      .distinct()
+  }
+
+  /** `rows` (any frame with `entity_id`) plus `canonical_id` from `entities`
+    * (entity_id, canonical_id): an entity with no canonical row is its own
+    * canonical id. The entity map is dictionary-sized and broadcast, so the
+    * join never shuffles `rows`. */
+  def withCanonical(rows: DataFrame, entities: DataFrame): DataFrame =
+    rows.join(broadcast(entities.select(col("entity_id"), col("canonical_id"))),
+        Seq("entity_id"), "left")
+      .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))
 
   /** Incremental CC maintenance: fold NEW edges into a previous component
     * assignment without re-reading the old edge set — the canonicalization

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{Pipeline, SparkEntry}
 import graft.schema.InputDoc
 import graft.io.TableFormat
-import graft.kg.{Linker, Triples}
+import graft.kg.{Canonicalize, Linker, Triples}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,44 +52,16 @@ object StreamPipeline {
       checkpointDir: String,
       scenario: String = "morph",
       trigger: Trigger = Trigger.AvailableNow(),
-      models: Pipeline.Models = Pipeline.fixtureModels()): StreamingQuery = {
-    val modelsBc = spark.sparkContext.broadcast(models)
-    // Canonicalization is dictionary-side and static for the stream's lifetime:
-    // run it ONCE at stream start, hold the (dictionary-sized, broadcastable
-    // by design) result ON THE DRIVER, and rebuild the side frame per batch —
-    // localCheckpoint blocks live on executors, so one lost executor would
-    // kill every later micro-batch of a long-running query ("checkpoint block
-    // not found" with the lineage already truncated). The streaming path
-    // emits the same canonical subjects and sameAs triples as batch.
-    val entityRows: Seq[(Long, Long)] = graft.kg.Canonicalize.canonicalize(spark, dict)
-      .select(col("entity_id").cast("long"), col("canonical_id").cast("long"))
-      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    val entities = {
-      import spark.implicits._
-      entityRows.toDF("entity_id", "canonical_id")
-    }
-    val streamId = graft.io.Compact.streamInstanceId(checkpointDir)
-    val annotated = annotateStream(spark, docs, modelsBc)
-    annotated.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[graft.schema.Doc], epochId: Long) =>
-        val mentions = Pipeline.extractMentions(batch, scenario)
-        val linked = Linker.link(mentions, dict)
-        val triples = Triples.fromLinkedMentions(
-          linked.join(broadcast(entities), Seq("entity_id"), "left")
-            .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id"))))
+      models: Pipeline.Models = Pipeline.fixtureModels()): StreamingQuery =
+    startTriples(spark, docs, dict, checkpointDir, scenario, trigger, models) {
+      (triples, epochId, streamId) =>
         // idempotent epoch-keyed write: a replayed epoch overwrites itself;
         // the checkpoint-scoped stream_id keeps its Compact identity stable
         // across replays (no double-merge after compaction deleted the dir)
         TableFormat.save(triples, s"$outDir/epoch=$epochId", "doc_id",
           buckets = 8, stage = s"triples-epoch-$epochId",
           extra = Map("stream_id" -> streamId))
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming KG construction into the ONE pred-partitioned, SPARQL-
     * queryable triple STORE — the continuous-ingest twin of [[run]] (which
@@ -121,31 +93,13 @@ object StreamPipeline {
       checkpointDir: String,
       scenario: String = "morph",
       trigger: Trigger = Trigger.AvailableNow(),
-      models: Pipeline.Models = Pipeline.fixtureModels()): StreamingQuery = {
-    val modelsBc = spark.sparkContext.broadcast(models)
-    val entityRows: Seq[(Long, Long)] = graft.kg.Canonicalize.canonicalize(spark, dict)
-      .select(col("entity_id").cast("long"), col("canonical_id").cast("long"))
-      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    val entities = {
-      import spark.implicits._
-      entityRows.toDF("entity_id", "canonical_id")
-    }
-    val streamId = graft.io.Compact.streamInstanceId(checkpointDir)
-    val annotated = annotateStream(spark, docs, modelsBc)
-    annotated.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[graft.schema.Doc], epochId: Long) =>
+      models: Pipeline.Models = Pipeline.fixtureModels()): StreamingQuery =
+    startTriples(spark, docs, dict, checkpointDir, scenario, trigger, models) {
+      (triples, epochId, streamId) =>
         val stamp = s"$streamId:$epochId"
         val committed = TableFormat.isComplete(storePath) &&
           TableFormat.readManifest(storePath).fields.get("update_id").contains(stamp)
         if (!committed) {
-          val mentions = Pipeline.extractMentions(batch, scenario)
-          val linked = Linker.link(mentions, dict)
-          val triples = Triples.fromLinkedMentions(
-            linked.join(broadcast(entities), Seq("entity_id"), "left")
-              .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id"))))
           // bootstrap: an EMPTY store (schema + zero-partition manifest), so
           // every epoch — including the first — lands through the one
           // applyDelta path with identical graph semantics
@@ -158,7 +112,46 @@ object StreamPipeline {
             insert = triples,
             extraFields = Map("update_id" -> stamp))
         }
-        ()
+    }
+
+  /** The streaming query both sinks share: annotate the stream, then per
+    * micro-batch run the batch stages (mentions → link → canonical join →
+    * triples) and hand the batch's triples, its epoch id and the
+    * checkpoint-scoped stream id to `sink`.
+    *
+    * Canonicalization is dictionary-side and static for the stream's
+    * lifetime: it runs ONCE at stream start, and the (dictionary-sized,
+    * broadcastable by design) result is held ON THE DRIVER and rebuilt as
+    * the side frame per batch — localCheckpoint blocks live on executors, so
+    * one lost executor would kill every later micro-batch of a long-running
+    * query ("checkpoint block not found" with the lineage already
+    * truncated). The streaming path emits the same canonical subjects and
+    * sameAs triples as batch. */
+  private def startTriples(
+      spark: SparkSession,
+      docs: Dataset[InputDoc],
+      dict: DataFrame,
+      checkpointDir: String,
+      scenario: String,
+      trigger: Trigger,
+      models: Pipeline.Models)(sink: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    val modelsBc = spark.sparkContext.broadcast(models)
+    val entityRows: Seq[(Long, Long)] = Canonicalize.canonicalize(spark, dict)
+      .select(col("entity_id").cast("long"), col("canonical_id").cast("long"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    val entities = {
+      import spark.implicits._
+      entityRows.toDF("entity_id", "canonical_id")
+    }
+    val streamId = graft.io.Compact.streamInstanceId(checkpointDir)
+    annotateStream(spark, docs, modelsBc).writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: Dataset[graft.schema.Doc], epochId: Long) =>
+        val linked = Linker.link(Pipeline.extractMentions(batch, scenario), dict)
+        sink(Triples.fromLinkedMentions(Canonicalize.withCanonical(linked, entities)),
+          epochId, streamId)
       }
       .start()
   }

@@ -222,7 +222,7 @@ class SnapshotSpec extends AnyFunSuite {
       s"$work/incr", batchId = "b1", buckets = 2)
     // batch 2 arrives with the grown dict + the delta → recovery fold
     val after2 = Pipeline.runIncremental(spark, secondHalf, dict,
-      s"$work/incr", batchId = "b2", buckets = 2, dictDelta = Some(delta))
+      s"$work/incr", batchId = "b2", buckets = 2, dictChange = Some(Pipeline.DictChange.Added(delta)))
     assert(after2.exceptAll(full).count() === 0L)
     assert(full.exceptAll(after2).count() === 0L)
     // the fold actually rewired canonicalization: entities table now carries
@@ -233,7 +233,7 @@ class SnapshotSpec extends AnyFunSuite {
     // idempotent: re-running b2 with the same delta commits nothing new
     val snapsBefore = Snapshots.snapshots(s"$work/incr/triples").map(_.id)
     val again = Pipeline.runIncremental(spark, secondHalf, dict,
-      s"$work/incr", batchId = "b2", buckets = 2, dictDelta = Some(delta))
+      s"$work/incr", batchId = "b2", buckets = 2, dictChange = Some(Pipeline.DictChange.Added(delta)))
     assert(Snapshots.snapshots(s"$work/incr/triples").map(_.id) === snapsBefore)
     assert(again.count() === after2.count())
     rm(new java.io.File(work))
@@ -262,7 +262,7 @@ class SnapshotSpec extends AnyFunSuite {
       .count() > 0, "fixture must have linked a to-be-removed entity for the test to bite")
     // batch 2 arrives after the deletion → recovery fold
     val after2 = Pipeline.runIncremental(spark, secondHalf, newDict,
-      s"$work/incr", batchId = "b2", buckets = 2, dictRemoved = Some(removed))
+      s"$work/incr", batchId = "b2", buckets = 2, dictChange = Some(Pipeline.DictChange.Removed(removed)))
     assert(after2.exceptAll(full).count() === 0L)
     assert(full.exceptAll(after2).count() === 0L)
     // no triple or linked row references a removed entity anymore
@@ -274,10 +274,67 @@ class SnapshotSpec extends AnyFunSuite {
     // idempotent: re-running b2 with the same removal commits nothing new
     val snapsBefore = Snapshots.snapshots(s"$work/incr/triples").map(_.id)
     val again = Pipeline.runIncremental(spark, secondHalf, newDict,
-      s"$work/incr", batchId = "b2", buckets = 2, dictRemoved = Some(removed))
+      s"$work/incr", batchId = "b2", buckets = 2, dictChange = Some(Pipeline.DictChange.Removed(removed)))
     assert(Snapshots.snapshots(s"$work/incr/triples").map(_.id) === snapsBefore)
     assert(again.count() === after2.count())
     rm(new java.io.File(work))
+  }
+
+  test("dict-change fold resumes from every commit boundary of batch 2 to the one-shot triples") {
+    import java.nio.file.{Files, Paths}
+    val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
+    val docs = spark.createDataset(Fixtures.inputDocs(24))
+    val firstHalf = docs.filter(d => d.doc_id < "doc-000012")
+    val secondHalf = docs.filter(d => d.doc_id >= "doc-000012")
+    val tables = Seq("docs_labeled", "mentions", "linked", "entities", "triples", "shrink_docs")
+    def logLines(t: String): Vector[String] = {
+      val p = Paths.get(t, "_snapshots.jsonl")
+      if (!Files.exists(p)) Vector.empty
+      else Files.readAllLines(p).toArray(Array.empty[String]).toVector.filter(_.nonEmpty)
+    }
+    def sorted(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+    val cases = Seq(
+      ("added", dict.filter(col("entity_id") % 5 =!= 1), dict,
+        Pipeline.DictChange.Added(dict.filter(col("entity_id") % 5 === 1)), "b2:dict"),
+      ("removed", dict, dict.filter(col("entity_id") % 5 =!= 0),
+        Pipeline.DictChange.Removed(dict.filter(col("entity_id") % 5 === 0)), "b2:dict-shrink"))
+    for ((name, dict1, dict2, change, prefix) <- cases) {
+      val work = tmp(s"graft-fold-crash-$name")
+      val full = Pipeline.runAll(spark, docs, dict2, s"$work/full", buckets = Some(2))
+      val want = sorted(full, full.columns.toSeq)
+      val incr = s"$work/incr"
+      def runB2() = Pipeline.runIncremental(spark, secondHalf, dict2, incr,
+        batchId = "b2", buckets = 2, dictChange = Some(change))
+      Pipeline.runIncremental(spark, firstHalf, dict1, incr, batchId = "b1", buckets = 2)
+      val b1Lines = tables.map(t => t -> logLines(s"$incr/$t")).toMap
+      assert(sorted(runB2(), full.columns.toSeq) === want, name)
+      val b2Lines = tables.map(t => t -> logLines(s"$incr/$t").drop(b1Lines(t).size)).toMap
+      val stagesAfterB2 = tables.map(t => t -> Snapshots.snapshots(s"$incr/$t").map(_.stage)).toMap
+      // every commit batch 2 made, in commit order
+      val commits = tables.flatMap { t =>
+        Snapshots.snapshots(s"$incr/$t").drop(b1Lines(t).size).map(sn => (sn.tsMs, t, sn.stage))
+      }.sortBy(_._1)
+      assert(commits.map(_._1).distinct.size === commits.size, s"$name: tied commit times $commits")
+      // the fold committed every step, so each boundary below is a real one
+      val foldStages = Seq(s"$prefix-relink-del", s"$prefix-relink", s"$prefix-refit-del", s"$prefix-refit")
+      assert(foldStages.forall(commits.map(_._3).contains), s"$name: $commits")
+      for (k <- commits.indices) {
+        // crash after batch 2's first k commits: every log keeps its lines
+        // up to there; the orphaned snap-* dirs of later commits stay on disk
+        val kept = commits.take(k).groupBy(_._2).map { case (t, cs) => t -> cs.size }
+        for (t <- tables) {
+          val log = Paths.get(incr, t, "_snapshots.jsonl")
+          if (Files.exists(log)) Files.writeString(log,
+            (b1Lines(t) ++ b2Lines(t).take(kept.getOrElse(t, 0))).map(_ + "\n").mkString)
+        }
+        assert(sorted(runB2(), full.columns.toSeq) === want, s"$name: resume after commit $k")
+        for (t <- tables)
+          assert(Snapshots.snapshots(s"$incr/$t").map(_.stage) === stagesAfterB2(t),
+            s"$name: $t log after resuming from commit $k")
+      }
+      rm(new java.io.File(work))
+    }
   }
 
   test("column stats sidecar: bounds, null count, and string columns round-trip") {
