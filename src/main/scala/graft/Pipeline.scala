@@ -368,12 +368,20 @@ object Pipeline {
 
   /** Scenario → (token texts, labels) extraction expressed as Catalyst
     * higher-order functions over the nested Doc struct; the per-sentence BIOSE
-    * scan is the one UDF. level: token | morph. */
+    * scan is the one UDF. level: token | morph.
+    *
+    * The scan also numbers `occ`, the occurrence index of (surface,
+    * category) within the sentence in span order, with the counter the gold
+    * side uses ([[graft.eval.Mentions.occurrences]]). A sentence is one row,
+    * so the index needs no window, and the plan stays narrow: no shuffle and
+    * no sort. */
   def extractMentions(docs: Dataset[Doc], scenario: String): DataFrame = {
-    val spark = docs.sparkSession
     val scanUdf = udf { (toks: Seq[String], labels: Seq[String]) =>
       val spans = Biose.parseSpans(labels.toIndexedSeq)
-      spans.map(s => (toks.slice(s.start, s.end).mkString(" "), s.label, s.start, s.end))
+      val ments = spans.map(s => (toks.slice(s.start, s.end).mkString(" "), s.label))
+      spans.lazyZip(ments).lazyZip(graft.eval.Mentions.occurrences(ments)).map {
+        case (s, (surface, cat), occ) => (surface, cat, s.start, s.end, occ)
+      }
     }
     val s = docs.toDF()
       .select(col("doc_id"), explode(col("sents")).as("sent"))
@@ -393,14 +401,12 @@ object Pipeline {
          expr("flatten(transform(tokens, t -> transform(t.morphs, m -> m.nemoMultiAlignMorph)))"))
       case other => throw new IllegalArgumentException(s"unknown scenario: $other")
     }
-    val exploded = s
-      .withColumn("ment", explode(scanUdf(toksCol, labelsCol)))
+    s.withColumn("ment", explode(scanUdf(toksCol, labelsCol)))
       .select(col("doc_id"), col("sent_id"),
         col("ment._1").as("surface"), col("ment._2").as("category"),
-        col("ment._3").as("start"), col("ment._4").as("end"))
-      .withColumn("level", lit(if (scenario.contains("morph") && !scenario.endsWith("token")) "morph" else "token"))
-      .withColumn("scenario", lit(scenario))
-    graft.eval.Mentions.withOccurrenceIndex(exploded)
+        col("ment._3").as("start"), col("ment._4").as("end"),
+        lit(if (scenario.contains("morph") && !scenario.endsWith("token")) "morph" else "token").as("level"),
+        lit(scenario).as("scenario"), col("ment._5").as("occ"))
   }
 
   // ---------- G7: full run with checkpointed stages ----------
@@ -426,10 +432,10 @@ object Pipeline {
     * buckets, clamped to [1, 1024]. A stage fed by an earlier one reads that
     * stage's exact manifest `bytes`; the two fed by the caller (`docs`,
     * `dict`) use the optimizer's size estimate of that input. No join's
-    * estimate is used: it can be far larger than the data. An input the
+    * estimate is used: it can be far larger than the data. `docs` the
     * optimizer cannot size, such as an RDD-backed Dataset, reports
-    * `spark.sql.defaultSizeInBytes` and gets the 1024-bucket maximum, so
-    * pass `buckets` with one. */
+    * `spark.sql.defaultSizeInBytes`; docs_labeled then gets one bucket per
+    * partition of `docs`, under the same clamp. */
   def runAll(
       spark: SparkSession,
       docs: Dataset[InputDoc],
@@ -466,12 +472,18 @@ object Pipeline {
       buckets.getOrElse(TableFormat.adaptiveBuckets(inputBytes, maxBytes))
     def planBytes(in: Dataset[_]): Long =
       in.queryExecution.optimizedPlan.stats.sizeInBytes.min(Long.MaxValue).toLong
+    // docs the optimizer cannot size: one bucket per input partition
+    def docsBuckets: Int = buckets.getOrElse {
+      val bytes = planBytes(docs)
+      if (bytes != spark.sessionState.conf.defaultSizeInBytes) TableFormat.adaptiveBuckets(bytes, maxBytes)
+      else TableFormat.adaptiveBuckets(docs.rdd.getNumPartitions.toLong, 1L)
+    }
     def tableBytes(stages: String*): Long = stages.map(TableFormat.readManifest(_).bytes).sum
 
     // (a) docs_labeled — model-dependent: fingerprint gates the resume
     stage(paths.docsLabeled, "models_fp", fp) {
       val annotated = annotate(spark, docs, modelsBc)
-      TableFormat.save(annotated.toDF(), paths.docsLabeled, "doc_id", sized(planBytes(docs)),
+      TableFormat.save(annotated.toDF(), paths.docsLabeled, "doc_id", docsBuckets,
         "docs_labeled", extra = Map("models_fp" -> fp))
     }
     val labeled = TableFormat.load(spark, paths.docsLabeled).as[Doc]
@@ -540,7 +552,7 @@ object Pipeline {
     *
     * Exactness (the invariant IncrementalSpec + the `nemo_triples_incr`
     * oracle check): every stage is per-doc (annotate, mentions, occ-index)
-    * or per-mention-vs-static-dict (link, canonical join), and every
+    * or per-mention-vs-static-dict (link, canonical join), and the
     * `distinct()` in [[Triples.fromLinkedMentions]] carries `doc_id` — so for
     * batches that PARTITION the doc set, the union of per-batch outputs is
     * row-identical to one full-batch run. The one global structure,

@@ -3,7 +3,6 @@ package graft.eval
 import graft.label.Biose
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Mention-multiset evaluation (SURVEY §2 E1-E3) — the P/R≥0.95 gate.
   * Reference: ne_evaluate_mentions.py:53-144.
@@ -28,28 +27,26 @@ object Mentions {
     PRF(prec, rec, f1, t.size.toLong, p.size.toLong, correct)
   }
 
+  /** The occurrence index of each key in `keys`: the n-th occurrence of a
+    * key gets n. This is the multiset counting rule of get_ment_set
+    * (:116-144), applied to one sentence's mentions in span order by both
+    * [[sentenceMentions]] and the pipeline's span scan
+    * (`Pipeline.extractMentions`). */
+  def occurrences[K](keys: Seq[K]): Seq[Int] = {
+    val seen = scala.collection.mutable.HashMap[K, Int]()
+    keys.map { k =>
+      val occ = seen.getOrElse(k, 0) + 1
+      seen(k) = occ
+      occ
+    }
+  }
+
   /** Sentence (tokens, labels) → occurrence-indexed mention tuples (E1+E2 fused,
     * pure form; the reference's fix_multi_tag is applied by the caller). */
   def sentenceMentions(sentId: Long, toks: IndexedSeq[String], labels: IndexedSeq[String],
                        joinChar: String = ""): Seq[(Long, String, String, Int)] = {
     val ms = Biose.mentionScan(toks, labels, joinChar)
-    val seen = scala.collection.mutable.HashMap[(String, String), Int]()
-    ms.map { case (surface, cat) =>
-      val k = (surface, cat)
-      val occ = seen.getOrElse(k, 0) + 1
-      seen(k) = occ
-      (sentId, surface, cat, occ)
-    }
-  }
-
-  /** Distributed form of E2: mentions DF (doc_id, sent_id, surface, category,
-    * pos) → + occ via the one genuine window function in the system
-    * (row_number over (sent, surface, cat) ordered by position). */
-  def withOccurrenceIndex(mentions: DataFrame): DataFrame = {
-    val w = Window
-      .partitionBy(col("doc_id"), col("sent_id"), col("surface"), col("category"))
-      .orderBy(col("start"))
-    mentions.withColumn("occ", row_number().over(w))
+    ms.zip(occurrences(ms)).map { case ((surface, cat), occ) => (sentId, surface, cat, occ) }
   }
 
   /** Distributed E3: P/R/F1 of pred vs gold mention DataFrames on exact-tuple

@@ -44,10 +44,15 @@ object Canonicalize {
     * the distributed loop. */
   def connectedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val pairs = edges.select(col("src"), col("dst"))
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold >= 0 && pairs.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
-      driverComponents(spark, pairs)
+    if (fitsDriver(spark, pairs)) driverComponents(spark, pairs)
     else distributedComponents(spark, edges, maxIter)
+  }
+
+  /** Spark's own test for collecting a relation to broadcast it: its
+    * estimated size is within `spark.sql.autoBroadcastJoinThreshold` (≥ 0). */
+  private def fitsDriver(spark: SparkSession, df: DataFrame): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
   }
 
   /** Both directions of every edge: the distributed loop's neighbor relation,
@@ -56,17 +61,25 @@ object Canonicalize {
     edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
 
-  /** Union-find over the collected edges. Nodes are numbered in Spark's
-    * ordering of their ids, and a union keeps the smaller root, so each root
-    * is its component's minimum — the label [[distributedComponents]]
-    * converges to. */
+  /** [[unionFind]] over the collected edges. */
   private def driverComponents(spark: SparkSession, pairs: DataFrame): DataFrame = {
     val nodeField = symmetric(pairs).schema("src")
     val dt = nodeField.dataType
     val edges = pairs.select(col("src").cast(dt), col("dst").cast(dt)).collect()
+    unionFind(spark, nodeField, edges.map(r => (r.get(0), r.get(1))))
+  }
+
+  /** (node, component) for every endpoint of `edges`, whose ids are external
+    * values of `nodeField`'s type. Nodes are numbered in Spark's ordering of
+    * their ids, and a union keeps the smaller root, so each root is its
+    * component's minimum — the label [[distributedComponents]] converges
+    * to. */
+  private def unionFind(spark: SparkSession, nodeField: StructField,
+                        edges: Seq[(Any, Any)]): DataFrame = {
+    val dt = nodeField.dataType
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
     val ordering = TypeUtils.getInterpretedOrdering(dt)
-    val nodes = edges.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).distinct
+    val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2)).distinct
       .map(id => (id, toCatalyst(id))).toArray
       .sortWith((a, b) => ordering.lt(a._2, b._2)).map(_._1)
     val index = nodes.iterator.zipWithIndex.toMap
@@ -79,7 +92,7 @@ object Canonicalize {
       r
     }
     edges.foreach { e =>
-      val (a, b) = (find(index(e.get(0))), find(index(e.get(1))))
+      val (a, b) = (find(index(e._1)), find(index(e._2)))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
     val rows = nodes.indices.map(i => Row(nodes(i), nodes(find(i))))
@@ -201,9 +214,23 @@ object Canonicalize {
     * shared by k entities emits k−1 edges (all-pairs would emit k²/2 — a
     * quadratic blowup on a hot alias at dictionary scale). The connected
     * components of the star graph equal those of the all-pairs graph by
-    * construction (every member reaches every other through the hub). */
+    * construction (every member reaches every other through the hub).
+    *
+    * The size rule of [[connectedComponents]] applies one level up, at the
+    * (entity_id, alias_norm) blocks: blocks within the broadcast threshold
+    * are collected once and solved on the driver, one Spark job with no
+    * exchange. There each block's members are edged to one of them; as the
+    * union keeps the smaller root, that gives the star graph's components
+    * and labels. Larger blocks build [[starEdges]] for [[connectedComponents]]. */
   def canonicalize(spark: SparkSession, dict: DataFrame): DataFrame = {
-    val comp = connectedComponents(spark, starEdges(Linker.aliasBlocks(dict)))
+    val blocks = Linker.aliasBlocks(dict).select(col("entity_id"), col("alias_norm"))
+    val comp =
+      if (fitsDriver(spark, blocks)) {
+        val members = blocks.filter(col("entity_id").isNotNull).collect()
+          .groupMap(_.get(1))(_.get(0)).valuesIterator.map(_.distinct)
+        unionFind(spark, blocks.schema("entity_id"),
+          members.flatMap(ids => ids.tail.map(_ -> ids.head)).toSeq)
+      } else connectedComponents(spark, starEdges(blocks))
     dict.join(comp.withColumnRenamed("node", "entity_id"), Seq("entity_id"), "left")
       .withColumn("canonical_id", coalesce(col("component"), col("entity_id")))
       .drop("component")
@@ -212,13 +239,15 @@ object Canonicalize {
   /** The star edges of alias blocks (SparkER's blocking graph, PAPERS.md):
     * `blocks` holds (entity_id, alias_norm) rows, e.g. [[Linker.aliasBlocks]]
     * or a subset of it; every entity of a block gets one edge (src, dst) to
-    * the block's min entity_id. [[canonicalize]] and the dictionary-change
-    * folds of [[graft.Pipeline.runIncremental]] build their edges here. */
+    * the block's min entity_id. Duplicate block rows need no `distinct` of
+    * their own: they leave the minimum unchanged, and the edges' `distinct`
+    * drops the duplicate edges. [[canonicalize]] above the broadcast
+    * threshold and the dictionary-change folds of
+    * [[graft.Pipeline.runIncremental]] build their edges here. */
   def starEdges(blocks: DataFrame): DataFrame = {
     val hub = org.apache.spark.sql.expressions.Window.partitionBy("block")
     blocks
       .select(col("entity_id"), col("alias_norm").as("block"))
-      .distinct()
       .withColumn("dst", min("entity_id").over(hub))
       .filter(col("entity_id") =!= col("dst"))
       .select(col("entity_id").as("src"), col("dst"))

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Triple materialization (SURVEY §2 G7/A15): linked+canonicalized mentions →
@@ -15,6 +15,12 @@ object Triples {
 
   /** linked: output of Linker.link joined with canonical ids (columns
     * entity_id, canonical_id, canonical, dict_category, surface, doc_id, ...).
+    *
+    * `mentions` rows are a multiset, one per linked mention. The per-doc
+    * facts (inDoc, label, category and, for an entity that is not its own
+    * canonical id, sameAs) come from one `explode` of (pred, obj) pairs per
+    * mention and one `distinct`: the predicates differ, so that is the
+    * union of one `distinct` per predicate.
     */
   def fromLinkedMentions(linked: DataFrame): DataFrame = {
     val base = linked.select(
@@ -22,15 +28,18 @@ object Triples {
       col("entity_id"), col("canonical"), col("dict_category"),
       col("surface"), col("doc_id"))
 
+    def fact(pred: String, obj: Column) = struct(lit(pred).as("pred"), obj.as("obj"))
     val mentions = base.select(col("subj"), lit("mentions").as("pred"), col("surface").as("obj"), col("doc_id"))
-    val inDoc = base.select(col("subj"), lit("inDoc").as("pred"), col("doc_id").as("obj"), col("doc_id")).distinct()
-    val label = base.select(col("subj"), lit("label").as("pred"), col("canonical").as("obj"), col("doc_id")).distinct()
-    val category = base.select(col("subj"), lit("category").as("pred"), col("dict_category").as("obj"), col("doc_id")).distinct()
-    val sameAs = base
-      .filter(uri(col("entity_id")) =!= col("subj"))
-      .select(col("subj"), lit("sameAs").as("pred"), uri(col("entity_id")).as("obj"), col("doc_id"))
+    val facts = base
+      .select(col("subj"), col("doc_id"), explode(array(
+        fact("inDoc", col("doc_id")),
+        fact("label", col("canonical")),
+        fact("category", col("dict_category")),
+        when(uri(col("entity_id")) =!= col("subj"), fact("sameAs", uri(col("entity_id")))))).as("fact"))
+      .filter(col("fact").isNotNull)
+      .select(col("subj"), col("fact.pred").as("pred"), col("fact.obj").as("obj"), col("doc_id"))
       .distinct()
 
-    mentions.unionByName(inDoc).unionByName(label).unionByName(category).unionByName(sameAs)
+    mentions.unionByName(facts)
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import graft.{Bench, SparkEntry}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -18,8 +19,11 @@ import scala.util.{Failure, Success, Try}
   * query `--reps` times in a row (default 4) and prints rep 1 on its own —
   * it is cold: JIT, and the session artifacts (IVF/PQ indexes, the annotate
   * cache) a query builds on first use — then the min, median and spread
-  * (max − min) of the warm reps. `--plans` runs each query once and prints
-  * the formatted final plan of every SQL execution the run raised, in
+  * (max − min) of the warm reps, then each rep's wall beside the number of
+  * classes Spark's code generator compiled during it: a warm rep that
+  * compiles has had its classes evicted from the codegen cache
+  * (`spark.sql.codegen.cache.maxEntries`). `--plans` runs each query once
+  * and prints the formatted final plan of every SQL execution the run raised, in
   * order; a `localCheckpoint` cut raises its own execution, so the plan
   * behind the cut is there too, not only the post-cut `Scan ExistingRDD`.
   *
@@ -43,16 +47,24 @@ object Profile {
   private def run(spark: SparkSession, sfDir: String, q: Query): Unit =
     q(spark, sfDir).write.format("noop").mode("overwrite").save()
 
-  /** Wall seconds of `reps` consecutive runs of each query. Names are
-    * checked at the call; each query runs as the iterator reaches it. */
+  /** One run of a query: its wall seconds, and the classes Spark's code
+    * generator compiled meanwhile (the JVM-wide `CodegenMetrics` count). A
+    * warm rep that compiles found its classes evicted from the codegen
+    * cache, and pays the compile and the JIT warm-up again. */
+  final case class Rep(wallS: Double, compiles: Long)
+
+  /** `reps` consecutive runs of each query. Names are checked at the call;
+    * each query runs as the iterator reaches it. */
   def time(spark: SparkSession, sfDir: String, names: Seq[String],
-           reps: Int): Iterator[(String, Try[Seq[Double]])] = {
+           reps: Int): Iterator[(String, Try[Seq[Rep]])] = {
     require(reps >= 1, s"reps must be >= 1, got $reps")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
     resolve(names).iterator.map { case (name, q) =>
       name -> Try((1 to reps).map { _ =>
+        val c0 = compiled.getCount
         val t0 = System.nanoTime()
         run(spark, sfDir, q)
-        (System.nanoTime() - t0) / 1e9
+        Rep((System.nanoTime() - t0) / 1e9, compiled.getCount - c0)
       })
     }
   }
@@ -126,13 +138,15 @@ object Profile {
         }
       }.count(identity)
       else time(spark, sfDir, queries, reps).map { case (name, r) =>
-        report(name, r) { walls =>
-          val warm = walls.tail
+        report(name, r) { runs =>
+          val warm = runs.tail.map(_.wallS)
           val stats =
             if (warm.isEmpty) ""
             else f"  warm min=${warm.min}%.3fs median=${median(warm)}%.3fs " +
               f"spread=${warm.max - warm.min}%.3fs (${warm.size} reps)"
-          println(f"[profile] $name%-28s cold=${walls.head}%.3fs$stats")
+          println(f"[profile] $name%-28s cold=${runs.head.wallS}%.3fs$stats")
+          println(s"[profile] $name wall/compiles per rep: " +
+            runs.map(x => f"${x.wallS}%.3fs/${x.compiles}").mkString(" "))
         }
       }.count(identity)
     } finally spark.stop()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *           no Row encoding) — Spark-scheduled twin of the kernel
   *   enc   — gen + annotate through the Dataset ENCODER boundary
   *           (mapPartitions → InternalRow), forced without decode
-  *   full  — the bench job (adds extractMentions scan + occurrence window)
+  *   full  — the bench job (adds the extractMentions scan, occ included)
   */
 object ScaleWhere {
   def main(args: Array[String]): Unit = {

@@ -53,6 +53,42 @@ class KgSpec extends AnyFunSuite {
     expect
   }
 
+  /** `canonicalize` of `dict` on the driver path (default broadcast
+    * threshold) and on the star-edge loop (threshold -1): one schema and the
+    * same rows. Returns entity_id → canonical_id. */
+  private def assertCanonicalizeBothPaths(dict: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val driver = Canonicalize.canonicalize(spark, dict)
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (loopSchema, loopRows) = try {
+      val loop = Canonicalize.canonicalize(spark, dict)
+      (loop.schema, loop.collect().toSeq)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(driver.schema === loopSchema)
+    def multiset(rows: Seq[org.apache.spark.sql.Row]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+    val driverRows = driver.collect().toSeq
+    assert(multiset(driverRows) === multiset(loopRows))
+    driver.select("entity_id", "canonical_id").as[(Long, Long)].collect().toMap
+  }
+
+  test("canonicalize: driver path and star-edge loop give the same entity table") {
+    val fixture = assertCanonicalizeBothPaths(
+      spark.createDataset(graft.fixtures.Fixtures.entityDictionary()).toDF())
+    assert(fixture.exists { case (e, c) => e != c }, "the fixture dictionary merges entities")
+    val r = new Random(43)
+    val aliases = Vector("acme", "acme corp", "zebra", "zebra park", "ACME", "  acme  ", "x y z", "omega")
+    for (_ <- 0 until 12) {
+      val n = 1 + r.nextInt(25)
+      val dict = (0 until n).map { i =>
+        // repeated aliases inside an entity give duplicate block rows
+        val as = Seq.fill(1 + r.nextInt(3))(aliases(r.nextInt(aliases.size)))
+        (r.nextInt(1000).toLong * 1000 + i, s"e$i", as, if (r.nextBoolean()) "ORG" else "LOC")
+      }.toDF("entity_id", "canonical", "aliases", "category")
+      assertCanonicalizeBothPaths(dict)
+    }
+  }
+
   test("property: connected components equal union-find oracle on 20 random graphs") {
     val r = new Random(31)
     for (_ <- 0 until 20) {

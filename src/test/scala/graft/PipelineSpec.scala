@@ -4,8 +4,17 @@ import graft.fixtures.Fixtures
 import graft.eval.Mentions
 import graft.kg.{Linker, Canonicalize}
 import graft.io.TableFormat
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline gates (SURVEY §5): mention P/R ≥ 0.95, passenger
   * invariant, linking/canonicalization/triples, checkpoint-resume. */
@@ -222,6 +231,108 @@ class PipelineSpec extends AnyFunSuite {
       sized.filter(col("doc_id") === "doc-000003").count())
     def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
     rm(new java.io.File(work))
+  }
+
+  test("runAll sizes docs_labeled of an RDD-backed docs Dataset by its partitions, with the same triples") {
+    val work = java.nio.file.Files.createTempDirectory("graft-rdd").toString
+    val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
+    val docs = spark.createDataset(spark.sparkContext.parallelize(Fixtures.inputDocs(20), 3))
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes ===
+      BigInt(spark.sessionState.conf.defaultSizeInBytes), "an RDD-backed Dataset is unsized")
+    val unsized = Pipeline.runAll(spark, docs, dict, s"$work/rdd")
+    assert(TableFormat.readManifest(s"$work/rdd/docs_labeled").fields("buckets") ===
+      docs.rdd.getNumPartitions.toString)
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.select("subj", "pred", "obj", "doc_id").collect().map(_.mkString("\u0001"))
+        .groupMapReduce(identity)(_ => 1)(_ + _)
+    val fixed = Pipeline.runAll(spark, docs, dict, s"$work/fixed", buckets = Some(4))
+    assert(multiset(unsized).nonEmpty)
+    assert(multiset(unsized) === multiset(fixed))
+    def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
+    rm(new java.io.File(work))
+  }
+
+  /** The executed plans of the SQL executions `action` raises, in order. */
+  private def capturePlans(action: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerBusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { action; ListenerBusDrain.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** Every physical operator of `plan`, through adaptive plans and their
+    * query stages. */
+  private def planNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case p => p +: p.children.flatMap(planNodes)
+  }
+
+  test("plan shape: occ without a window, one aggregate pair in triples, no exchange in canonicalize") {
+    val work = java.nio.file.Files.createTempDirectory("graft-plans").toString
+    val dict = spark.createDataset(Fixtures.entityDictionary()).toDF()
+    val docs = spark.createDataset(Fixtures.inputDocs(20))
+    val plans = capturePlans(Pipeline.runAll(spark, docs, dict, work))
+    def write(stage: String): Seq[SparkPlan] = {
+      val ws = plans.filter(p => planNodes(p).exists {
+        case w: DataWritingCommandExec => w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == stage
+          case _ => false
+        }
+        case _ => false
+      })
+      assert(ws.size === 1, s"$stage: ${ws.size} writes")
+      planNodes(ws.head)
+    }
+    val mentions = write("mentions")
+    assert(!mentions.exists(_.nodeName.contains("Window")), mentions.map(_.nodeName))
+    assert(mentions.count(_.isInstanceOf[ShuffleExchangeExec]) === 1, "only the bucket repartition")
+    val triples = write("triples")
+    assert(triples.count(_.isInstanceOf[BaseAggregateExec]) === 2, triples.map(_.nodeName))
+    val canon = capturePlans(Canonicalize.canonicalize(spark, dict).write.format("noop").mode("overwrite").save())
+    assert(canon.nonEmpty)
+    assert(!canon.flatMap(planNodes).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      canon.map(_.treeString).mkString("\n"))
+    def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
+    rm(new java.io.File(work))
+  }
+
+  test("property: extractMentions numbers occ like sentenceMentions on random BIOSE rows") {
+    import graft.schema.{Doc, Morpheme, Sentence, Token}
+    val r = new scala.util.Random(17)
+    val vocab = Vector("x", "y", "z")
+    val atoms = Vector("O", "S-PER", "B-PER", "I-PER", "E-PER", "S-LOC", "B-LOC", "E-LOC", "I-ORG")
+    val docs = (0 until 40).map { d =>
+      val sents = (0 until 1 + r.nextInt(3)).map { si =>
+        val toks = Vector.fill(r.nextInt(14))(vocab(r.nextInt(vocab.size)))
+        val labels = Vector.fill(toks.size)(atoms(r.nextInt(atoms.size)))
+        Sentence(si.toLong, toks.indices.map { i =>
+          Token(toks(i), labels(i), "O", "O", "O",
+            Array(Morpheme(toks(i), toks(i), "NN", "_", i + 1, "O", "O")))
+        }.toArray)
+      }
+      Doc(f"doc-$d%03d", Array.empty, sents.toArray)
+    }
+    val expect = docs.flatMap { d =>
+      d.sents.toSeq.flatMap { s =>
+        Mentions.sentenceMentions(s.sent_id, s.tokens.map(_.text).toIndexedSeq,
+            s.tokens.map(_.nemoSingle).toIndexedSeq, joinChar = " ")
+          .map { case (sid, surf, cat, occ) => (d.doc_id, sid, surf, cat, occ) }
+      }
+    }
+    assert(expect.exists(_._5 > 2), "the rows repeat surfaces")
+    val got = Pipeline.extractMentions(spark.createDataset(docs).repartition(3), "token-single")
+      .select("doc_id", "sent_id", "surface", "category", "occ")
+      .as[(String, Long, String, String, Int)].collect().toSeq
+    assert(got.sorted === expect.sorted)
   }
 
   test("runAll accepts an injected model set (non-default registry entry)") {

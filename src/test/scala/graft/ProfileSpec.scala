@@ -5,8 +5,8 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The profiler's core on the shared session: rep walls per named query,
-  * loud rejection of unknown names, and plan capture behind checkpoint cuts. */
+/** The profiler's core on the shared session: rep walls and codegen
+  * compiles per named query, loud rejection of unknown names, and plan capture behind checkpoint cuts. */
 class ProfileSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
@@ -17,8 +17,17 @@ class ProfileSpec extends AnyFunSuite {
     out.foreach { case (name, walls) =>
       assert(walls.isSuccess, s"$name: $walls")
       assert(walls.get.size === 2)
-      assert(walls.get.forall(_ > 0), s"$name: ${walls.get}")
+      assert(walls.get.forall(_.wallS > 0), s"$name: ${walls.get}")
     }
+  }
+
+  test("each rep reports its codegen compiles; warm reps of a small query compile nothing") {
+    val Seq((name, reps)) = Profile.time(spark, sf, Seq("q_filter_project"), reps = 3).toList
+    assert(name === "q_filter_project")
+    assert(reps.isSuccess, s"$reps")
+    assert(reps.get.size === 3)
+    assert(reps.get.forall(_.compiles >= 0), s"${reps.get}")
+    assert(reps.get.tail.map(_.compiles) === Seq(0L, 0L), s"${reps.get}")
   }
 
   test("a failing query is reported as a failure and the next query still runs") {
